@@ -18,8 +18,6 @@ stage chews through millions of words per Arrow batch:
         uint16 x, y, w, h; uint8 conf, block, par, line;
         uint16 word_idx; uint16 text byte-length
     concatenated utf-8 word texts
-
-The legacy row-interleaved GG01 format is still decoded for old corpora.
 """
 
 from __future__ import annotations
@@ -29,9 +27,7 @@ import struct
 import numpy as np
 
 MAGIC = b"GG02"
-MAGIC_V1 = b"GG01"
 _HDR = struct.Struct("<4sH")
-_REC_V1 = struct.Struct("<HHHHBBBBHH")
 
 HEADER_DTYPE = np.dtype(
     [
@@ -56,15 +52,6 @@ CONF_NOWORD = 255
 
 _U16_FIELDS = ("x", "y", "w", "h", "word_idx")
 _U8_FIELDS = ("block", "par", "line")
-
-
-class NotBatchDecodable(ValueError):
-    """The batch contains a page the vectorized GG02 path cannot handle
-    (non-GG02 magic, or a truncated/count-corrupted blob). Callers fall
-    back to the per-page ``decode_page_columns`` loop, which handles GG01
-    and surfaces the precise malformed page. A dedicated type so callers
-    do not accidentally swallow unrelated ``ValueError`` subclasses (e.g.
-    ``UnicodeDecodeError`` from the text-decode step)."""
 
 
 def conf_signed(conf: np.ndarray) -> np.ndarray:
@@ -116,27 +103,27 @@ def encode_page(words: list[dict]) -> bytes:
 def decode_page_columns(blob: bytes) -> tuple[np.ndarray, list[str]]:
     """Fast columnar decode → (structured header array, word texts)."""
     magic, n = _HDR.unpack_from(blob, 0)
-    if magic == MAGIC:
-        hdr = np.frombuffer(blob, dtype=HEADER_DTYPE, count=n, offset=_HDR.size)
-        start = _HDR.size + n * HEADER_DTYPE.itemsize
-        ends = start + np.cumsum(hdr["tlen"].astype(np.int64))
-        starts = ends - hdr["tlen"]
-        if n and int(ends[-1]) > len(blob):  # slices would silently shorten
-            raise ValueError("GG02 blob truncated in text region")
-        texts = [blob[s:e].decode("utf-8") for s, e in zip(starts, ends)]
-        return hdr, texts
-    if magic == MAGIC_V1:  # legacy row-interleaved
-        pos = _HDR.size
-        hdr = np.empty(n, dtype=HEADER_DTYPE)
-        texts = []
-        for i in range(n):
-            rec = _REC_V1.unpack_from(blob, pos)
-            pos += _REC_V1.size
-            texts.append(blob[pos:pos + rec[9]].decode("utf-8"))
-            pos += rec[9]
-            hdr[i] = rec
-        return hdr, texts
-    raise ValueError("not a glyph grid")
+    if magic != MAGIC:
+        raise ValueError("not a glyph grid")
+    hdr = np.frombuffer(blob, dtype=HEADER_DTYPE, count=n, offset=_HDR.size)
+    start = _HDR.size + n * HEADER_DTYPE.itemsize
+    ends = start + np.cumsum(hdr["tlen"].astype(np.int64))
+    starts = ends - hdr["tlen"]
+    if n and int(ends[-1]) > len(blob):  # slices would silently shorten
+        raise ValueError("GG02 blob truncated in text region")
+    texts = [blob[s:e].decode("utf-8") for s, e in zip(starts, ends)]
+    return hdr, texts
+
+
+def _reject_first(bad: np.ndarray, reason: str) -> None:
+    """Raise ValueError for the first page flagged in ``bad``; its index
+    into the batch rides on the exception as ``page_index`` so the caller
+    can name the page (``ocr.ocr_lines``)."""
+    if bad.any():
+        i = int(np.argmax(bad))
+        err = ValueError(f"batch page {i}: {reason}")
+        err.page_index = i
+        raise err
 
 
 def decode_batch_columns(blobs) -> tuple:
@@ -145,9 +132,10 @@ def decode_batch_columns(blobs) -> tuple:
     Arrow batch: per-page decode costs ~75 µs in tiny-array numpy calls;
     this path does ONE fancy-gather + ONE segmented cumsum for the batch.
 
-    ``blobs``: sequence of P page blobs (bytes). ALL must be GG02 —
-    raises ValueError on any other magic (caller falls back to the
-    per-page ``decode_page_columns`` loop, which also handles GG01).
+    ``blobs``: sequence of P page blobs (bytes). ALL must be well-formed
+    GG02: a bad magic or a truncated header or text region raises
+    ValueError naming the first bad page, with its index in
+    ``page_index``.
 
     Returns ``(word_page, hdr, tstart, tend, joined, rel_end)``:
       * ``word_page`` int64[W] — index into ``blobs`` for each word
@@ -167,19 +155,19 @@ def decode_batch_columns(blobs) -> tuple:
     big = np.frombuffer(joined, dtype=np.uint8)
     off = np.zeros(P, dtype=np.int64)
     np.cumsum(lens[:-1], out=off[1:])
-    if lens.min() < _HDR.size or not (
-        (big[off] == MAGIC[0]).all() and (big[off + 1] == MAGIC[1]).all()
-        and (big[off + 2] == MAGIC[2]).all() and (big[off + 3] == MAGIC[3]).all()
-    ):
-        raise NotBatchDecodable("decode_batch_columns requires all-GG02 blobs")
+    # a blob shorter than the header is bad on length alone; reading its
+    # magic would run into the next page (or off the end)
+    bad = lens < _HDR.size
+    head = off[~bad, None] + np.arange(len(MAGIC), dtype=np.int64)
+    bad[~bad] = (big[head] != np.frombuffer(MAGIC, np.uint8)).any(axis=1)
+    _reject_first(bad, "not a GG02 glyph grid")
     counts = big[off + 4].astype(np.int64) | (big[off + 5].astype(np.int64) << 8)
     # A count-corrupted blob whose declared header region runs past its own
     # length would otherwise fancy-gather bytes from the FOLLOWING page
     # (silent garbage words) — or IndexError off the end if it is the last
-    # page. Validate before the gather so malformed input fails loudly and
-    # takes the per-page fallback, which pinpoints the bad page.
-    if ((_HDR.size + HEADER_DTYPE.itemsize * counts) > lens).any():
-        raise NotBatchDecodable("GG02 blob truncated in header region")
+    # page. Validate before the gather so malformed input fails loudly.
+    _reject_first((_HDR.size + HEADER_DTYPE.itemsize * counts) > lens,
+                  "GG02 blob truncated in header region")
     W = int(counts.sum())
     first = np.zeros(P, dtype=np.int64)
     np.cumsum(counts[:-1], out=first[1:])
@@ -200,18 +188,9 @@ def decode_batch_columns(blobs) -> tuple:
     page_tbytes = gcum[first + counts] - gcum[first]
     rel_end = _HDR.size + HEADER_DTYPE.itemsize * counts + page_tbytes
     # Text region truncated: the word-text slices (tstart/tend) would
-    # silently gather bytes from the next page. Fail loudly → per-page
-    # fallback raises the precise error for the malformed blob.
-    if (rel_end > lens).any():
-        raise NotBatchDecodable("GG02 blob truncated in text region")
+    # silently gather bytes from the next page. Fail loudly.
+    _reject_first(rel_end > lens, "GG02 blob truncated in text region")
     return word_page, hdr, tstart, tend, joined, rel_end
-
-
-def grid_end(hdr: np.ndarray) -> int:
-    """payload_end from an ALREADY-DECODED header array — the hot path
-    (``ocr_lines``) has the header in hand and must not re-frombuffer
-    the blob just to locate trailing extras."""
-    return _HDR.size + len(hdr) * HEADER_DTYPE.itemsize + int(hdr["tlen"].sum())
 
 
 def payload_end(blob: bytes) -> int:

@@ -198,8 +198,8 @@ def embed_qr(page_blob: bytes, payload: str) -> bytes:
 
 def extract_qr_at(blob: bytes, off: int) -> str | None:
     """Parse the QR container at a known offset (corrupt checksum → None).
-    The fast path for callers that already decoded the glyph header and
-    know exactly where the grid ends (``glyph.grid_end``)."""
+    The fast path for callers that already know exactly where the grid
+    ends (``rel_end`` from ``glyph.decode_batch_columns``)."""
     if len(blob) < off + _QR_STRUCT.size + 1:
         return None
     rest = blob[off:]

@@ -9,9 +9,9 @@ word/box stream D3 (media_ref, page_no, block, par, line, word_idx, text,
 conf, x, y, w, h) with zero per-row Python at the DataFrame level.
 
 Image preprocessing (grayscale/threshold/deskew, I1–I4) and real decoders
-would slot into ``_decode_batch`` unchanged; they are pure batch functions
-of the binary column. Real image/audio libs are absent in this sandbox —
-see ``operators/multimodal.py`` for the gated stubs.
+would slot into ``ocr_lines``' ``run_batch`` unchanged; they are pure batch
+functions of the binary column. Real image/audio libs are optional — see
+``operators/multimodal.py`` for the gated stubs.
 
 Quality gates mirror the reference: words kept at conf > 30
 (util/ocr_pdf.py:390-392); pages with no readable words are surfaced via
@@ -23,7 +23,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 import numpy as np
@@ -134,6 +134,16 @@ def page_confidence(words: DataFrame) -> DataFrame:
     )
 
 
+def _joined_text(*keys: str) -> Column:
+    """Group aggregate: the group's word texts joined by spaces, ordered
+    by ``keys`` (a hash aggregation — no windows, no Python)."""
+    return F.array_join(
+        F.transform(F.array_sort(F.collect_list(F.struct(*keys, "text"))),
+                    lambda s: s["text"]),
+        " ",
+    ).alias("text")
+
+
 def assemble_lines(words: DataFrame) -> DataFrame:
     """L6 (util/ocr_pdf.py:177-194): word stream → line table.
 
@@ -144,15 +154,7 @@ def assemble_lines(words: DataFrame) -> DataFrame:
     return (
         words.groupBy("media_ref", "page_no", "block", "par", "line")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("word_idx", "text"))
-                    ),
-                    lambda s: s["text"],
-                ),
-                " ",
-            ).alias("text"),
+            _joined_text("word_idx"),
             F.min("x").alias("x"),
             F.min("y").alias("y"),
         )
@@ -190,14 +192,7 @@ def roi_ocr(media_pages: DataFrame, rois: DataFrame,
     return (
         j.groupBy("media_ref", "page_no", "roi_id")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(
-                        F.struct("block", "par", "line", "word_idx", "text"))),
-                    lambda s: s["text"],
-                ),
-                " ",
-            ).alias("text"),
+            _joined_text("block", "par", "line", "word_idx"),
             F.count(F.lit(1)).cast("long").alias("n_words"),
             F.avg("conf").alias("mean_conf"),
         )
@@ -217,14 +212,7 @@ def segment_blocks(words: DataFrame) -> DataFrame:
     return (
         words.groupBy("media_ref", "page_no", "block")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(
-                        F.struct("par", "line", "word_idx", "text"))),
-                    lambda s: s["text"],
-                ),
-                " ",
-            ).alias("text"),
+            _joined_text("par", "line", "word_idx"),
             F.min("x").alias("x"),
             F.min("y").alias("y"),
         )
@@ -303,11 +291,9 @@ def ocr_lines(media_pages: DataFrame, passthrough: tuple[str, ...] = (),
     table) are replicated onto every emitted line, so callers can avoid a
     line-level join back to page metadata.
     """
-    import numpy as np
     from pyspark.sql import types as T
 
-    from ..glyph import (NotBatchDecodable, decode_batch_columns,
-                         decode_page_columns, grid_end)
+    from ..glyph import decode_batch_columns
     from .multimodal import extract_qr_at
     from .raster import estimate_skew_boxes
 
@@ -469,120 +455,14 @@ def ocr_lines(media_pages: DataFrame, passthrough: tuple[str, ...] = (),
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             try:
-                yield run_batch(pdf)
-                continue
-            except NotBatchDecodable:
-                # legacy GG01 / malformed page in the batch → per-page
-                # loop (which handles GG01 and raises the real error for
-                # truncated blobs). ONLY this type: a bare ValueError
-                # would also swallow UnicodeDecodeError from text decode
-                # and re-run the whole batch just to re-raise it.
-                pass
-            refs, pages, heads, txts = [], [], [], []
-            extras: dict[str, list] = {c: [] for c in passthrough}
-            rows = zip(pdf["media_ref"], pdf["page_no"], pdf["glyph_grid"],
-                       *[pdf[c] for c in passthrough])
-            for media_ref, page_no, blob, *extra in rows:
-                blob = bytes(blob)
-                hdr, texts = decode_page_columns(blob)
-                # QR probe reuses the decoded header: len==grid_end (the
-                # overwhelmingly common no-QR case) costs one tlen sum,
-                # no second frombuffer pass over the blob
-                qr = None
-                if emit_qr:
-                    end = grid_end(hdr)
-                    if len(blob) > end:
-                        qr = extract_qr_at(blob, end)
-                if qr is not None:
-                    heads.append(np.array(
-                        [[QR_BLOCK, 0, 0, 0, QR_Y]], dtype=np.int32))
-                    txts.append(qr)
-                    refs.append(np.full(1, media_ref, dtype=object))
-                    pages.append(np.full(1, int(page_no), dtype=np.int32))
-                    for c, v in zip(passthrough, extra):
-                        extras[c].append(np.full(1, v, dtype=object))
-                # the 255-encoded conf=-1 sentinel must NOT pass the gate;
-                # two uint8 compares instead of a conf_signed int32 copy
-                # (equivalent for any threshold ≥ 0 — pytest-pinned)
-                keepm = (hdr["conf"] > conf_threshold) & (hdr["conf"] != 255)
-                if dpi is not None:  # resolution model (see MIN_GLYPH_PX)
-                    keepm &= hdr["h"].astype(np.int64) * dpi >= _GLYPH_GATE
-                if lexicon:
-                    # dictionary validation (same rule as the batch path)
-                    resc = ((~keepm) & (hdr["conf"] != 255)
-                            & (hdr["conf"] >= LEXICON_RESCUE_MIN_CONF))
-                    if dpi is not None:
-                        resc &= (hdr["h"].astype(np.int64) * dpi
-                                 >= _GLYPH_GATE)
-                    for i in np.nonzero(resc)[0].tolist():
-                        if texts[i].upper() in lexicon:
-                            keepm[i] = True
-                keep = np.nonzero(keepm)[0]
-                if len(keep) == 0:
-                    continue
-                h = hdr[keep]
-                if psm in RESEGMENT_PSMS:
-                    # geometric re-segmentation (same rule as run_batch)
-                    key = h["y"].astype(np.int64)
-                    order = np.lexsort((h["word_idx"], h["x"], key))
-                else:
-                    key = ((h["block"].astype(np.int64) << 40)
-                           | (h["par"].astype(np.int64) << 20)
-                           | h["line"].astype(np.int64))
-                    order = np.lexsort((h["word_idx"], key))
-                h2 = h[order]
-                skey = key[order]
-                bounds = np.nonzero(np.diff(skey))[0] + 1
-                starts = np.concatenate(([0], bounds))
-                ends = np.concatenate((bounds, [len(skey)]))
-                n_lines = len(starts)
-                # numeric reductions, vectorized per page
-                lx = np.minimum.reduceat(h2["x"], starts).astype(np.int32)
-                ly = np.minimum.reduceat(h2["y"], starts).astype(np.int32)
-                if deskew:
-                    spread = (np.maximum.reduceat(h2["y"], starts)
-                              .astype(np.int64) - ly)
-                    dx = (np.maximum.reduceat(h2["x"], starts)
-                          .astype(np.int64) - lx)
-                    if ((spread >= SKEW_SPREAD_PX)
-                            & (spread >= SKEW_MIN_SLOPE * dx)).any():
-                        got = _deskewed_anchors(h2, starts)
-                        if got is not None:
-                            lx, ly = got
-                if psm in RESEGMENT_PSMS:
-                    heads.append(np.stack([
-                        np.zeros(n_lines, np.int32),
-                        np.zeros(n_lines, np.int32),
-                        np.arange(n_lines, dtype=np.int32),
-                        lx,
-                        ly,
-                    ], axis=1))
-                else:
-                    heads.append(np.stack([
-                        h2["block"][starts].astype(np.int32),
-                        h2["par"][starts].astype(np.int32),
-                        h2["line"][starts].astype(np.int32),
-                        lx,
-                        ly,
-                    ], axis=1))
-                ts = [texts[keep[i]] for i in order]
-                txts.extend(" ".join(ts[s:e]) for s, e in zip(starts, ends))
-                refs.append(np.full(n_lines, media_ref, dtype=object))
-                pages.append(np.full(n_lines, int(page_no), dtype=np.int32))
-                for c, v in zip(passthrough, extra):
-                    extras[c].append(np.full(n_lines, v, dtype=object))
-            if not heads:
-                yield pd.DataFrame({f.name: [] for f in schema.fields})
-                continue
-            hh = np.concatenate(heads)
-            out = {
-                "media_ref": np.concatenate(refs),
-                "page_no": np.concatenate(pages),
-                "block": hh[:, 0], "par": hh[:, 1], "line": hh[:, 2],
-                "text": txts, "x": hh[:, 3], "y": hh[:, 4],
-            }
-            for c in passthrough:
-                out[c] = np.concatenate(extras[c])
-            yield pd.DataFrame(out)
+                out = run_batch(pdf)
+            except ValueError as e:
+                i = getattr(e, "page_index", None)  # glyph._reject_first
+                if i is None:
+                    raise
+                raise ValueError(
+                    f"bad glyph page media_ref={pdf['media_ref'].iat[i]!r} "
+                    f"page_no={int(pdf['page_no'].iat[i])}: {e}") from e
+            yield out
 
     return media_pages.select(*cols).mapInPandas(run, schema=schema)

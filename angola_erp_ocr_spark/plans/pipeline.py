@@ -8,8 +8,9 @@ One declarative DAG (SURVEY §3.1 "Spark restatement"):
         parse + media markers — no self-union of the raw scan
       ├ media branch: markers (kind='media' only — filtered BEFORE the
       │   shuffle, so it moves ~one row per page, not per line)
-      │   → join media_pages → mapInPandas OCR decode (D3 words)
-      │   → conf gate → line assembly (hash agg) → P6 normalize
+      │   → broadcast join onto media_pages → ONE mapInPandas stage
+      │   (decode → conf gate → line assembly, ``ocr_lines``)
+      │   → P6 normalize
       → union candidates
       → repartition(doc_id), then BOTH the repeated-block count window
         (partitionBy doc_id, text) and the total-order window
@@ -19,17 +20,20 @@ One declarative DAG (SURVEY §3.1 "Spark restatement"):
       → boilerplate strip (AVOID_RE + repeated-block ≥k per doc)
       → total order (seg, rank, y, x) → offsets → array<span> per doc
         (final groupBy(doc_id) reuses the same partitioning: no exchange)
+      → left join from documents' doc_ids, so every doc gets a row
 
 Scale notes (100 TB / 10^12 docs):
   * The unit of parallelism through the OCR stage is the *page*, not the
     doc — a 300-page doc fans out to 300 independent rows before any
     grouping, so heavy docs can't capsize a task (SURVEY §4 skew defense).
-  * Physical exchanges: (1) span rows by doc_id, (2) media markers only
-    (≈#pages rows), (3) OCR word→line hash agg, (4) post-union doc_id for
-    strip+order+assembly. The raw table is scanned twice, but the second
-    scan shuffles only media markers. Verified with .explain("formatted").
-  * Joins: spans↔media_pages is an equi-join on media_ref (unique per
-    page, no hot keys); AQE picks broadcast when the marker side is small.
+  * Hash exchanges (4): (1) span rows by doc_id for the seg window,
+    (2) media markers only (≈#pages rows) for their row_number window,
+    (3) post-union doc_id for strip+order+assembly, (4) the doc_id side
+    of the keep-every-doc shuffled hash join (the assembled side reuses
+    (3)). The raw table is scanned 3 times: span rows, markers, and the
+    doc_id list. Verified with .explain("formatted").
+  * Joins: markers↔media_pages is an equi-join on media_ref (unique per
+    page, no hot keys), planned as a broadcast of the marker side.
   * Everything outside the single mapInPandas stage is whole-stage
     codegen (regex, windows, aggregations).
 """

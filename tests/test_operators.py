@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from angola_erp_ocr_spark.functions.normalize import (
@@ -522,39 +523,35 @@ def test_ladder_lang_rung_recovers_what_por_cannot(spark):
     assert not got_por["must_ok"]
 
 
-def test_lexicon_rescue_in_gg01_fallback_path(spark):
-    """The per-page fallback decode (GG01 legacy blobs) applies the SAME
-    lexicon-rescue rule as the vectorized GG02 path."""
+@pytest.mark.parametrize("bad", ["truncated_gg02", "gg01"])
+def test_ocr_lines_error_names_the_bad_page(spark, bad):
+    """ocr_lines has one decode path: a malformed page (a truncated GG02
+    blob) or a retired GG01 blob fails the batch, and the error names the
+    offending page's media_ref and page_no."""
     import struct
 
-    from angola_erp_ocr_spark.functions.languages import lexicon_for
     from angola_erp_ocr_spark.operators.ocr import ocr_lines
     from angola_erp_ocr_spark.schema import MEDIA_PAGE
 
-    def gg01(words):
-        out = [struct.pack("<4sH", b"GG01", len(words))]
-        for w in words:
-            tb = w["text"].encode()
-            out.append(struct.pack(
-                "<HHHHBBBBHH", w["x"], w["y"], w["w"], w["h"], w["conf"],
-                w["block"], w["par"], w["line"], w["word_idx"], len(tb)))
-            out.append(tb)
-        return bytearray(b"".join(out))
-
-    words = [
-        dict(x=0, y=0, w=8, h=12, conf=80, block=0, par=0, line=0,
-             word_idx=0, text="CLEAN"),
-        dict(x=60, y=0, w=8, h=12, conf=5, block=0, par=0, line=0,
-             word_idx=1, text="TAXABLE"),
-    ]
-    pages = spark.createDataFrame([("m1", 0, gg01(words), 150)], MEDIA_PAGE)
-    no_lex = [r["text"] for r in
-              ocr_lines(pages, conf_threshold=30).collect()]
-    assert no_lex == ["CLEAN"]
-    eng = [r["text"] for r in
-           ocr_lines(pages, conf_threshold=30,
-                     lexicon=lexicon_for("eng")).collect()]
-    assert eng == ["CLEAN TAXABLE"]
+    words = [dict(x=0, y=0, w=8, h=12, conf=80, block=0, par=0, line=0,
+                  word_idx=0, text="CLEAN")]
+    good = encode_page(words)
+    if bad == "gg01":
+        w = words[0]
+        blob = struct.pack("<4sH", b"GG01", 1) + struct.pack(
+            "<HHHHBBBBHH", w["x"], w["y"], w["w"], w["h"], w["conf"],
+            w["block"], w["par"], w["line"], w["word_idx"], 5) + b"CLEAN"
+    else:
+        blob = good[:-2]
+    rows = [("page://ok/0", 0, bytearray(good), 150),
+            ("page://bad/0", 3, bytearray(blob), 150),
+            ("page://ok/1", 0, bytearray(good), 150)]
+    pages = spark.createDataFrame(rows, MEDIA_PAGE).coalesce(1)
+    with pytest.raises(Exception) as ei:
+        ocr_lines(pages).collect()
+    msg = str(ei.value)
+    assert "media_ref='page://bad/0' page_no=3" in msg
+    assert "batch page 1:" in msg
 
 
 def test_psm_resegmentation_in_ocr_lines(spark):

@@ -346,16 +346,13 @@ _pages = st.lists(st.lists(_word, min_size=0, max_size=9),
 @settings(max_examples=60, deadline=None)
 @given(pages=_pages, extra=st.binary(max_size=8))
 def test_batch_decode_matches_per_page(pages, extra):
-    import numpy as np
-
     from angola_erp_ocr_spark.glyph import (
-        decode_batch_columns, decode_page_columns, encode_page, grid_end)
+        decode_batch_columns, decode_page_columns, encode_page, payload_end)
 
     blobs = [encode_page(ws) + (extra if i % 2 else b"")
              for i, ws in enumerate(pages)]
     word_page, hdr, tstart, tend, joined, rel_end = \
         decode_batch_columns(blobs)
-    off = 0
     for i, blob in enumerate(blobs):
         h_ref, t_ref = decode_page_columns(blob)
         sel = word_page == i
@@ -363,53 +360,51 @@ def test_batch_decode_matches_per_page(pages, extra):
         got_texts = [joined[s:e].decode("utf-8")
                      for s, e in zip(tstart[sel], tend[sel])]
         assert got_texts == t_ref
-        assert int(rel_end[i]) == grid_end(h_ref)
-        off += len(blob)
+        assert int(rel_end[i]) == payload_end(blob)
+
+
+def _bad_page_index(batch):
+    import pytest as _pytest
+
+    from angola_erp_ocr_spark.glyph import decode_batch_columns
+
+    with _pytest.raises(ValueError) as ei:
+        decode_batch_columns(batch)
+    assert f"batch page {ei.value.page_index}:" in str(ei.value)
+    return ei.value.page_index
+
+
+def _one_word_page(text="ok"):
+    from angola_erp_ocr_spark.glyph import encode_page
+
+    return encode_page([dict(x=1, y=2, w=3, h=4, conf=50, block=0, par=0,
+                             line=0, word_idx=0, text=text)])
 
 
 def test_batch_decode_rejects_legacy_gg01():
-    import pytest as _pytest
-
-    from angola_erp_ocr_spark.glyph import (NotBatchDecodable,
-                                            decode_batch_columns, encode_page)
-
-    good = encode_page([dict(x=1, y=2, w=3, h=4, conf=50, block=0, par=0,
-                             line=0, word_idx=0, text="ok")])
-    with _pytest.raises(NotBatchDecodable):
-        decode_batch_columns([good, b"GG01\x00\x00legacy"])
+    """GG01 (the retired row-interleaved codec) and any other non-GG02
+    blob is rejected, naming the first bad page of the batch."""
+    good = _one_word_page()
+    assert _bad_page_index([good, b"GG01\x00\x00legacy"]) == 1
+    # shorter than the header: bad on length, even as the last page
+    assert _bad_page_index([good, good, b"GG"]) == 2
+    assert _bad_page_index([b"", good]) == 0
 
 
 def test_batch_decode_rejects_truncated_blobs():
-    """A truncated/count-corrupted GG02 blob must raise NotBatchDecodable —
-    not silently gather bytes from the FOLLOWING page, and not IndexError
-    when it is the last page (ADVICE r2: glyph.py batch validation)."""
-    import pytest as _pytest
-
-    from angola_erp_ocr_spark.glyph import (NotBatchDecodable,
-                                            decode_batch_columns, encode_page)
-
-    good = encode_page([dict(x=1, y=2, w=3, h=4, conf=50, block=0, par=0,
-                             line=0, word_idx=0, text="hello")])
+    """A truncated/count-corrupted GG02 blob must raise ValueError naming
+    its page — not silently gather bytes from the FOLLOWING page, and not
+    IndexError when it is the last page."""
+    good = _one_word_page("hello")
     # header region truncated (records cut short), mid-batch and last
     hdr_cut = good[: 6 + 8]
-    for batch in ([hdr_cut, good], [good, hdr_cut]):
-        with _pytest.raises(NotBatchDecodable):
-            decode_batch_columns(batch)
+    assert _bad_page_index([hdr_cut, good]) == 0
+    assert _bad_page_index([good, hdr_cut]) == 1
     # text region truncated (header intact, word bytes cut short)
     txt_cut = good[:-2]
-    for batch in ([txt_cut, good], [good, txt_cut]):
-        with _pytest.raises(NotBatchDecodable):
-            decode_batch_columns(batch)
-
-
-def test_batch_fallback_does_not_catch_unicode_errors():
-    """ocr_lines' batch→per-page fallback catches ONLY NotBatchDecodable:
-    a UnicodeDecodeError (a ValueError subclass) from the text-decode step
-    must propagate, not trigger a pointless per-page re-run (ADVICE r2)."""
-    from angola_erp_ocr_spark.glyph import NotBatchDecodable
-
-    assert issubclass(NotBatchDecodable, ValueError)
-    assert not issubclass(UnicodeDecodeError, NotBatchDecodable)
+    assert _bad_page_index([txt_cut, good]) == 0
+    assert _bad_page_index([good, txt_cut]) == 1
+    assert _bad_page_index([good, txt_cut, good, txt_cut]) == 1
 
 
 def test_patho_doc_ids_matches_the_per_doc_rule(monkeypatch):
