@@ -3,35 +3,39 @@
 One declarative DAG (SURVEY §3.1 "Spark restatement"):
 
     documents(doc_id, spans)
-      → posexplode                              (span rows)
-      → ONE projection: segment ids (window) + digital "x,y|content"
-        parse + media markers — no self-union of the raw scan
-      ├ media branch: markers (kind='media' only — filtered BEFORE the
-      │   shuffle, so it moves ~one row per page, not per line)
-      │   → broadcast join onto media_pages → ONE mapInPandas stage
-      │   (decode → conf gate → line assembly, ``ocr_lines``)
-      │   → P6 normalize
-      → union candidates
-      → repartition(doc_id), then BOTH the repeated-block count window
-        (partitionBy doc_id, text) and the total-order window
-        (partitionBy doc_id) run on that single exchange —
-        hashpartitioning(doc_id) satisfies the clustered distribution of
-        the (doc_id, text) window, so EnsureRequirements adds sorts only
-      → boilerplate strip (AVOID_RE + repeated-block ≥k per doc)
+      → explode(spans ++ [anchor])              (span rows + 1 anchor/doc)
+      → ONE projection: digital "x,y|content" parse + media markers
+        (rank 0) + the anchor (rank 3) — no window, no shuffle yet
+      ├ media branch: markers (kind='media' filter, seg = the marker's
+      │   span offset) → broadcast join onto media_pages → ONE
+      │   mapInPandas stage (decode → conf gate → line assembly,
+      │   ``ocr_lines``) → P6 normalize; lines carry their marker's
+      │   offset with rank 1
+      → union candidates → AVOID_RE flag per row (still in the parallel
+        scan and OCR tasks)
+      → repartition(doc_id), then the repeated-block count window
+        (partitionBy doc_id, text), the segment window and the
+        total-order window (both partitionBy doc_id) run on that single
+        exchange — hashpartitioning(doc_id) satisfies the clustered
+        distribution of the (doc_id, text) window, so EnsureRequirements
+        adds sorts only
+      → boilerplate strip (AVOID flag + repeated-block ≥k per doc)
+      → segment key: running max of marker offsets in (offset, rank)
+        order
       → total order (seg, rank, y, x) → offsets → array<span> per doc
-        (final groupBy(doc_id) reuses the same partitioning: no exchange)
-      → left join from documents' doc_ids, so every doc gets a row
+        (final groupBy(doc_id) reuses the same partitioning: no
+        exchange); anchors order last and collect_list drops them, so
+        every doc gets exactly one row
 
 Scale notes (100 TB / 10^12 docs):
   * The unit of parallelism through the OCR stage is the *page*, not the
     doc — a 300-page doc fans out to 300 independent rows before any
     grouping, so heavy docs can't capsize a task (SURVEY §4 skew defense).
-  * Hash exchanges (4): (1) span rows by doc_id for the seg window,
-    (2) media markers only (≈#pages rows) for their row_number window,
-    (3) post-union doc_id for strip+order+assembly, (4) the doc_id side
-    of the keep-every-doc shuffled hash join (the assembled side reuses
-    (3)). The raw table is scanned 3 times: span rows, markers, and the
-    doc_id list. Verified with .explain("formatted").
+  * Hash exchanges (1): the post-union doc_id exchange, which carries the
+    parsed candidates plus one anchor row per doc and serves the
+    repeat-count window, the segment window, the total order and the
+    assembly. The raw table is scanned 2 times: span rows (with the
+    anchors) and markers. Verified with .explain("formatted").
   * Joins: markers↔media_pages is an equi-join on media_ref (unique per
     page, no hot keys), planned as a broadcast of the marker side.
   * Everything outside the single mapInPandas stage is whole-stage
@@ -40,84 +44,67 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import AVOID_RE, normalize_col
 from ..operators.ocr import ocr_lines
 
 SPAN_POS_RE = r"^(\d+),(\d+)\|"
+ANCHOR = 3  # rank of the per-doc anchor row: after every span, never emitted
+
+# The plan is written as SQL text: every Column-API call is a handful of
+# Py4J round trips (13 for one F.col), and building this plan that way
+# cost ~1,700 of them, about a quarter of a warm 5,000-doc pass on 4
+# cores. Regexes go in as raw literals (r'...'), so they reach Java
+# exactly as written here.
+_MEDIA = "span.kind = 'media'"
+_LINE = "rank BETWEEN 1 AND 2"  # OCR lines (1) and digital text (2)
 
 
-def _span_rows(documents: DataFrame) -> DataFrame:
-    return documents.select(
-        "doc_id", F.posexplode("spans").alias("pos", "span")
-    ).select(
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
-
-
-def explode_spans(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, spans) → span rows with segment ids (cumulative
-    media count in offset order)."""
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("offset")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return _span_rows(documents).withColumn(
-        "seg", F.sum(F.when(F.col("kind") == "media", 1).otherwise(0)).over(w)
-    )
+def _coord(group: int) -> str:
+    return (f"CASE WHEN {_MEDIA} THEN -1 ELSE CAST(nullif(regexp_extract("
+            f"span.text, r'{SPAN_POS_RE}', {group}), '') AS INT) END")
 
 
 def base_candidates(documents: DataFrame) -> DataFrame:
-    """Digital text candidates AND media markers in ONE projection over the
-    segmented span rows — a single scan + one doc_id exchange.
+    """Digital text candidates, media markers and one anchor row per doc in
+    ONE projection over the span rows — a single scan, no window.
 
     Digital lines parse the "x,y|content" prefix (nullif-guarded: a span
     without the prefix must NOT abort the job — reference R5 crash-stops
     become QA-tolerant rows; unparseable coords sort after positioned
-    lines, nulls last). Media rows become rank-0 markers.
+    lines, nulls last). Media rows become rank-0 markers. The anchor is a
+    null element appended to the doc's span array (rank ANCHOR, null
+    offset): it carries every doc, even one without spans or with all its
+    lines filtered, to the final per-doc aggregation.
     """
-    rows = explode_spans(documents)
-    is_media = F.col("kind") == "media"
-    return rows.select(
+    return documents.selectExpr(
         "doc_id",
-        "seg",
-        F.when(is_media, F.lit(0)).otherwise(F.lit(2)).alias("rank"),
-        F.when(is_media, F.lit(-1)).otherwise(
-            F.nullif(F.regexp_extract("text", SPAN_POS_RE, 2), F.lit(""))
-            .cast("int")
-        ).alias("y"),
-        F.when(is_media, F.lit(-1)).otherwise(
-            F.nullif(F.regexp_extract("text", SPAN_POS_RE, 1), F.lit(""))
-            .cast("int")
-        ).alias("x"),
-        F.when(is_media, F.lit("")).otherwise(
-            F.regexp_replace("text", SPAN_POS_RE, "")
-        ).alias("text"),
-        F.when(is_media, F.col("media_ref")).otherwise(F.lit(None).cast("string"))
-        .alias("media_ref"),
+        "explode(concat(coalesce(spans, array()), array(null))) AS span",
+    ).selectExpr(
+        "doc_id",
+        "span.offset AS offset",
+        f"CASE WHEN span IS NULL THEN {ANCHOR} WHEN {_MEDIA} THEN 0 ELSE 2 END"
+        " AS rank",
+        f"{_coord(2)} AS y",
+        f"{_coord(1)} AS x",
+        f"CASE WHEN {_MEDIA} THEN '' ELSE regexp_replace(span.text,"
+        f" r'{SPAN_POS_RE}', '') END AS text",
+        f"CASE WHEN {_MEDIA} THEN span.media_ref END AS media_ref",
     )
 
 
 def media_markers(documents: DataFrame) -> DataFrame:
-    """(doc_id, seg, media_ref) for media spans only.
+    """(doc_id, media_ref, seg) for media spans only, by a plain filter.
 
-    seg of a media span = its 1-based rank among the doc's media spans in
-    offset order — identical to the cumulative count, but computed on the
-    kind='media' subset so the shuffle moves one row per *page*, not one
-    per span.
+    seg is the marker's own span offset: the segment key that ``extract``
+    orders the doc's segments by (the running key of text spans is the
+    offset of their nearest preceding marker).
     """
-    rows = _span_rows(documents).where(F.col("kind") == "media")
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    return rows.select(
-        "doc_id", "media_ref", F.row_number().over(w).alias("seg")
-    )
+    return (documents.selectExpr("doc_id", "inline(spans)")
+            .where("kind = 'media'")
+            .selectExpr("doc_id", "media_ref", "offset AS seg"))
 
 
 def decoded_media_lines(documents: DataFrame, media_pages: DataFrame,
@@ -126,7 +113,7 @@ def decoded_media_lines(documents: DataFrame, media_pages: DataFrame,
                         lang: str | None = None,
                         psm: int | None = None) -> DataFrame:
     """OCR path: referenced pages → word stream → conf gate → lines →
-    normalized candidates with (doc_id, seg) resolved via the markers."""
+    normalized candidates at their marker's offset (rank 1)."""
     markers = media_markers(documents)
     # join (doc_id, seg) onto the PAGE table (one row per page) and let the
     # OCR stage replicate them onto lines — joining after decode would move
@@ -145,13 +132,8 @@ def decoded_media_lines(documents: DataFrame, media_pages: DataFrame,
     lines = ocr_lines(pages, passthrough=("doc_id", "seg"), emit_qr=True,
                       dpi=dpi, lexicon=lexicon_for(lang), **kwargs)
     return lines.select(
-        "doc_id",
-        F.col("seg").cast("long").alias("seg"),
-        F.lit(1).alias("rank"),
-        "y",
-        "x",
-        normalize_col(F.col("text")).alias("text"),
-        "media_ref",
+        "doc_id", F.expr("seg AS offset"), F.expr("1 AS rank"), "y", "x",
+        normalize_col(F.col("text")).alias("text"), "media_ref",
     )
 
 
@@ -159,7 +141,8 @@ def extract(documents: DataFrame, media_pages: DataFrame | None = None,
             repeat_k: int = 3, conf_threshold: int | None = None,
             dpi: int | None = None, lang: str | None = None,
             psm: int | None = None) -> DataFrame:
-    """Full extraction → documents_extracted(doc_id, spans).
+    """Full extraction → documents_extracted(doc_id, spans), one row per
+    distinct doc_id.
 
     ``conf_threshold``/``dpi``/``lang``/``psm`` parameterize the OCR
     decode for retry-ladder rungs (plans/cascade.py); the defaults are the
@@ -170,80 +153,64 @@ def extract(documents: DataFrame, media_pages: DataFrame | None = None,
     if media_pages is not None:
         cands = cands.unionByName(
             decoded_media_lines(documents, media_pages, conf_threshold, dpi,
-                                lang, psm)
-            .select(*cands.columns)
-        )
+                                lang, psm))
 
-    # ONE exchange for everything downstream: repeat-count window
-    # (doc_id, text), boilerplate filter, total-order window (doc_id) and
-    # the final per-doc assembly all run on hashpartitioning(doc_id).
+    # The AVOID test is per row, so it runs before the exchange, in the
+    # parallel scan and OCR tasks, as a flag (a filter here would be pushed
+    # into the OCR branch and evaluate normalize_col twice). Then ONE
+    # exchange for everything downstream: repeat-count window (doc_id,
+    # text), boilerplate filter, segment window, total-order window
+    # (doc_id) and the final per-doc assembly all run on
+    # hashpartitioning(doc_id).
     # (An agg+anti-join formulation of the repeated-block drop was tried
     # and rejected: Catalyst pushes the join through the union and
     # re-plans the whole scan+OCR subtree once per branch — 4× the work.)
-    part = cands.repartition("doc_id")
+    part = cands.selectExpr(
+        "*", f"upper(text) RLIKE r'{AVOID_RE}' AS _avoid",
+    ).repartition("doc_id")
 
-    rep_w = Window.partitionBy("doc_id", "text")
-    counted = part.withColumn(
-        "_rep",
-        F.sum(F.when(F.col("rank") > 0, 1).otherwise(0)).over(rep_w),
+    # markers and anchors always survive; lines drop on AVOID or repetition
+    kept = part.selectExpr(
+        "*",
+        f"count(CASE WHEN {_LINE} THEN 1 END)"
+        " OVER (PARTITION BY doc_id, text) AS _rep",
+    ).where(f"NOT ({_LINE}) OR (NOT _avoid AND _rep < {int(repeat_k)})")
+
+    # Segment key: the offset of the nearest marker at or before the row in
+    # (offset, rank) order. A marker keys its own segment, its OCR lines
+    # (same offset, rank 1) follow it, text spans take the running key, and
+    # text before the first marker keys null (sorts first). The anchor
+    # (null offset, sorted last) takes the doc's last key, so with rank
+    # ANCHOR it orders after every span below.
+    keyed = kept.selectExpr(
+        "doc_id", "rank", "y", "x", "text", "media_ref",
+        "max(CASE WHEN rank = 0 THEN offset END) OVER (PARTITION BY doc_id"
+        " ORDER BY offset ASC NULLS LAST, rank"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg",
     )
-    # markers (rank 0) always survive; lines drop on AVOID or repetition
-    kept = counted.where(
-        (F.col("rank") == 0)
-        | (
-            (~F.upper(F.col("text")).rlike(AVOID_RE))
-            & (F.col("_rep") < repeat_k)
-        )
-    ).drop("_rep")
 
     # Total order + offset renumbering via a row_number window: the sort
     # runs in Tungsten's binary UnsafeRow comparator (whole-stage codegen),
     # which measures faster than an equivalent per-array struct sort with
     # an interpreted comparator. Same doc_id exchange serves this window,
-    # the repeat-count window above, and the final assembly aggregation.
-    order_w = Window.partitionBy("doc_id").orderBy(
-        F.col("seg").asc(), F.col("rank").asc(),
-        F.col("y").asc_nulls_last(), F.col("x").asc_nulls_last(),
-        F.col("text").asc(),  # final tiebreak keeps the order total
+    # the two above, and the final assembly aggregation. Anchors number
+    # after every span, so spans keep offsets 0..n-1 however many anchors
+    # a doc_id has; text is the final tiebreak that keeps the order total.
+    spans = keyed.selectExpr(
+        "doc_id", "rank", "text", "media_ref",
+        "row_number() OVER (PARTITION BY doc_id ORDER BY seg, rank,"
+        " y ASC NULLS LAST, x ASC NULLS LAST, text) - 1 AS offset",
     )
-    spans = kept.withColumn("offset", F.row_number().over(order_w) - 1).select(
-        "doc_id",
-        F.struct(
-            F.when(F.col("rank") == 0, F.lit("media")).otherwise(F.lit("text"))
-            .alias("kind"),
-            F.col("text"),
-            F.col("media_ref"),
-            F.col("offset").cast("int").alias("offset"),
-        ).alias("span"),
-    )
-    assembled = spans.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("span.offset").alias("o"),
-                                        F.col("span").alias("s")))
-            ),
-            lambda e: e["s"],
-        ).alias("spans")
-    )
-    # Every input document must yield an output row, even when all its
-    # candidates were filtered (empty spans array, all-boilerplate doc):
-    # dropping the doc would make resume_filter re-process it forever and
-    # would let the golden pass-rate join silently lose it from the
+    # collect_list skips the anchors' null entries: a doc with no span left
+    # gets spans=[] rather than no row, so resume_filter does not
+    # re-process it forever and the golden pass-rate join keeps it in the
     # denominator.
-    empty = "array()"
-    spans_type = ("array<struct<kind:string,text:string,"
-                  "media_ref:string,offset:int>>")
-    # shuffle-hash, not sort-merge: both sides are (or become) partitioned
-    # by doc_id and the hash build avoids sorting the assembled arrays
-    return (
-        documents.select("doc_id")
-        .join(assembled.hint("shuffle_hash"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("spans"), F.expr(empty).cast(spans_type))
-            .alias("spans"),
-        )
-    )
+    return spans.groupBy("doc_id").agg(F.expr(
+        f"transform(array_sort(collect_list(CASE WHEN rank != {ANCHOR} THEN"
+        " named_struct('o', offset, 's', named_struct("
+        "'kind', CASE WHEN rank = 0 THEN 'media' ELSE 'text' END,"
+        " 'text', text, 'media_ref', media_ref, 'offset', offset)) END)),"
+        " e -> e.s) AS spans"))
 
 
 def resume_filter(documents: DataFrame, committed: DataFrame) -> DataFrame:

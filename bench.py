@@ -179,10 +179,10 @@ def _plan_digest(df) -> tuple[str, str]:
 def run_extraction(spark, corpus_dir: str) -> tuple[float, int]:
     """End-to-end interleaved extraction: read parquet → pipeline → force.
 
-    Forces via an aggregate over the spans column — a bare count() no
-    longer executes the pipeline, because extract()'s keep-every-doc left
-    join has unique right-side keys and Catalyst prunes the entire
-    extraction subtree when only the row count is needed."""
+    Forces via an aggregate over the spans column — a bare count() does
+    not execute the whole pipeline, because Catalyst prunes the segment
+    and total-order windows and the span assembly when only the row
+    count is needed."""
     from pyspark.sql import functions as F
 
     from angola_erp_ocr_spark.plans.pipeline import extract

@@ -296,11 +296,11 @@ def test_connected_components_converges(spark):
 
 def test_extract_plan_exchange_budget(spark):
     """Pin the flagship plan's shuffle budget (pipeline.py docstring, the
-    100 TB scale property): exactly 4 hash exchanges — span-row seg
-    window, media markers (one row per page), the single post-union
-    doc_id exchange serving both windows + assembly, and the
-    keep-every-doc join — plus broadcasts. A 5th hash exchange appearing
-    here means someone un-fused a window or broke partitioning reuse."""
+    100 TB scale property): exactly 1 hash exchange — the post-union
+    doc_id exchange that serves the repeat-count, segment and total-order
+    windows and the per-doc assembly — plus the marker broadcast. A 2nd
+    hash exchange appearing here means someone un-fused a window, brought
+    back a pre-shuffle segment window, or re-joined the doc_id list."""
     from angola_erp_ocr_spark.plans.pipeline import extract
     from angola_erp_ocr_spark.synth import build_corpus
 
@@ -312,7 +312,7 @@ def test_extract_plan_exchange_budget(spark):
         1 for line in plan.splitlines()
         if line.strip().startswith("(") and line.strip().split(") ")[-1]
         .startswith("Exchange"))
-    assert n_hash_exchanges == 4, f"exchange budget broken:\n{plan[:2000]}"
+    assert n_hash_exchanges == 1, f"exchange budget broken:\n{plan[:2000]}"
 
 
 def test_embedding_near_dups_lsh_blocking(spark):

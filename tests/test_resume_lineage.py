@@ -370,6 +370,38 @@ def test_extract_emits_empty_docs(spark):
     committed = extract(docs, None)
     assert resume_filter(docs, committed).count() == 0
 
+    # a doc_id held by two raw rows comes out once, with both rows' spans
+    # numbered 0..n-1 (the per-row anchors shift no offset)
+    dup_spans = [("text", "10,10|LINHA A", None, 0),
+                 ("text", "10,20|LINHA B", None, 1)]
+    dup = spark.createDataFrame(
+        [("dup", None, dup_spans), ("dup", None, dup_spans)],
+        DOCUMENTS_RAW).select("doc_id", "spans")
+    rows = extract(dup, None).collect()
+    assert len(rows) == 1
+    assert [(s["text"], s["offset"]) for s in rows[0]["spans"]] == [
+        ("LINHA A", 0), ("LINHA A", 1), ("LINHA B", 2), ("LINHA B", 3)]
+
+    # media spans whose page rows are missing stay markers, and they and
+    # the text around them keep their offsets
+    from angola_erp_ocr_spark.schema import MEDIA_PAGE
+    gaps = spark.createDataFrame(
+        [("gaps", None, [("text", "10,10|ANTES", None, 0),
+                         ("media", "", "page://gaps/0", 1),
+                         ("text", "10,10|ENTRE", None, 2),
+                         ("media", "", "page://gaps/1", 3),
+                         ("text", "10,10|DEPOIS", None, 4)])],
+        DOCUMENTS_RAW).select("doc_id", "spans")
+    no_pages = spark.createDataFrame([], MEDIA_PAGE)
+    [row] = extract(gaps, no_pages).collect()
+    assert [tuple(s) for s in row["spans"]] == [
+        ("text", "ANTES", None, 0),
+        ("media", "", "page://gaps/0", 1),
+        ("text", "ENTRE", None, 2),
+        ("media", "", "page://gaps/1", 3),
+        ("text", "DEPOIS", None, 4),
+    ]
+
 
 def test_snapshot_seq_after_expiry(spark, tmp_path):
     from angola_erp_ocr_spark.plans.snapshot import (
