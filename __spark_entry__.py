@@ -2135,12 +2135,14 @@ _ORACLES.update({
 
 def q_cascade_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R1/R2 cascade on a corpus where some docs fail the default OCR gate:
-    returns per-doc (had_text_pass1, has_text_final) — the retry must
-    recover every failing doc (rows-only; semantics pinned by
-    tests/test_resume_lineage.py::test_cascade_retry_recovers_low_conf_docs).
-    """
+    returns per-doc (had_text_pass1, has_text_final) — ``extract``'s pass 1
+    drops every conf-15 word (gate 30), and the committed retry ladder
+    must recover every failing doc (rung 3's gate is 10), so
+    has_text_final is the ladder's must-field gate."""
+    import tempfile
+
     from angola_erp_ocr_spark.glyph import encode_page
-    from angola_erp_ocr_spark.plans.cascade import extract_with_retry
+    from angola_erp_ocr_spark.plans.cascade import cascade_ladder_committed
     from angola_erp_ocr_spark.plans.pipeline import extract
     from angola_erp_ocr_spark.schema import DOCUMENTS_RAW, MEDIA_PAGE
 
@@ -2156,14 +2158,16 @@ def q_cascade_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
         did = f"c{i:04d}"
         conf = 15 if i % 3 == 0 else 80  # every 3rd doc fails the gate
         docs.append((did, None, [("media", "", f"page://{did}/0", 0)]))
-        media.append((f"page://{did}/0", 0, page(conf, "LINHA", f"N{i}"), 150))
+        media.append((f"page://{did}/0", 0,
+                      page(conf, "TOTAL", f"{100 + i},00", "AKZ"), 150))
     raw = spark.createDataFrame(docs, DOCUMENTS_RAW).select("doc_id", "spans")
     pages = spark.createDataFrame(media, MEDIA_PAGE)
 
     has_text = F.exists("spans", lambda s: s["kind"] == "text")
     p1 = extract(raw, pages).select("doc_id", has_text.alias("had_text_pass1"))
-    final = extract_with_retry(raw, pages).select(
-        "doc_id", has_text.alias("has_text_final"))
+    final = cascade_ladder_committed(
+        spark, raw, pages, tempfile.mkdtemp(prefix="sgq_cascade_retry_"),
+    ).select("doc_id", F.col("must_ok").alias("has_text_final"))
     return p1.join(final, "doc_id")
 
 
@@ -2298,7 +2302,9 @@ def q_cascade_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle predicts the exact field VALUES and winning pass numbers
     from doc_id arithmetic (reference sweep util/ocr_pdf.py:1170-1183 —
     the psm×lang sweep IS the reference ladder; keep-best 2388-2402)."""
-    from angola_erp_ocr_spark.plans.cascade import extract_ladder
+    import tempfile
+
+    from angola_erp_ocr_spark.plans.cascade import cascade_ladder_committed
     from angola_erp_ocr_spark.schema import MEDIA_PAGE
 
     d = _docs(spark, sf_dir).select("doc_id")
@@ -2355,7 +2361,8 @@ def q_cascade_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["media_ref", "page_no", "glyph_grid", "dpi"])
 
     pages = d.mapInPandas(gen_pages, schema=MEDIA_PAGE)
-    out = extract_ladder(raw, pages)
+    out = cascade_ladder_committed(
+        spark, raw, pages, tempfile.mkdtemp(prefix="sgq_cascade_ladder_"))
     return out.select(
         "doc_id", "total_amount", "total_amount_pass", "currency",
         "currency_pass", "invoice_date", "invoice_date_pass", "must_ok")

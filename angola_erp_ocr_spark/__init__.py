@@ -29,7 +29,7 @@ operators.similarity  embedding cosine top-k (brute force + LSH-bucketed ANN)
 operators.textstats   language-ID, quality scoring, token counts, fingerprints
 operators.multimodal  binary media columns: metadata, stubbed decoders
 plans.pipeline        end-to-end extract(): route → parse/OCR → order → emit
-plans.cascade         R1/R2 cheap-path-first routing + bounded OCR retry
+plans.cascade         R1/R2 cheap-path-first routing + committed retry ladder
 plans.lineage         per-partition lineage rows (resume / skew audit)
 sources.tables        S1 path resolution, binaryFile ingest, lake sinks
 streaming.incremental Structured Streaming foreachBatch wrapper

@@ -8,17 +8,13 @@ fields appear (SURVEY §4 R1/R2; api/util.py:88-115, util/ocr_pdf.py:
   * R1 is already inside ``extract`` — digital spans never enter the OCR
     stage; only ``kind='media'`` pages reach the mapInPandas decode, so
     the cheap path is the plan shape, not a control-flow branch.
-  * R2 becomes exactly TWO passes: extract everything, identify documents
-    whose result contains no text spans (the ERRO_QUALIDADE analogue —
-    every OCR word fell below the confidence gate), and re-run only those
-    documents with the fallback configuration (lower gate, standing in
-    for the reference's alternate psm/lang/dpi). A filter + anti-join +
-    union — no loops, no driver-side iteration.
-
-At production scale the first pass is committed to the lake before the
-retry (``cascade_committed``), so the retry reads the failed set from the
-committed table instead of recomputing the first pass — the same
-anti-join discipline as resume (SURVEY §4.4).
+  * R2 is the committed ladder, ``cascade_ladder_committed``: rung 1
+    extracts every document, each later rung re-extracts only the
+    media-bearing documents still failing the must-field gate, and
+    ``merge_retry_fields`` folds the rungs keep-best. Every rung commits
+    to the lake, so a later rung reads the failed set from the committed
+    passes instead of recomputing earlier ones — the same anti-join
+    discipline as resume (SURVEY §4.4).
 """
 
 from __future__ import annotations
@@ -27,45 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract
-
-RETRY_CONF_THRESHOLD = 10  # fallback gate (reference dpi/psm ladder analogue)
-
-
-def _has_text(col: str = "spans"):
-    return F.exists(col, lambda s: s["kind"] == "text")
-
-
-def _has_media(col: str = "spans"):
-    return F.exists(col, lambda s: s["kind"] == "media")
-
-
-def extract_with_retry(
-    documents: DataFrame,
-    media_pages: DataFrame,
-    retry_conf: int = RETRY_CONF_THRESHOLD,
-    repeat_k: int = 3,
-) -> DataFrame:
-    """One-plan variant: first pass ∪ (retry over the failed subset).
-
-    Note the first pass appears twice in the logical plan (once for the
-    survivors, once to derive the failed ids); use ``cascade_committed``
-    when the first pass should be computed exactly once.
-    """
-    first = extract(documents, media_pages, repeat_k)
-    # only media-bearing docs can OCR differently on retry; text-only docs
-    # that produced no spans are terminal (see cascade_committed)
-    retryable = documents.where(_has_media()).select("doc_id")
-    failed_ids = (
-        first.where(~_has_text()).select("doc_id")
-        .join(retryable, "doc_id", "left_semi")
-    )
-    ok = first.join(failed_ids, "doc_id", "left_anti")
-    retried = extract(
-        documents.join(failed_ids, "doc_id", "left_semi"),
-        media_pages, repeat_k, conf_threshold=retry_conf,
-    )
-    return ok.unionByName(retried)
-
 
 # Bounded stand-in for the reference's open-ended (psm × lang × dpi) sweep
 # over wordlist_langs.txt (util/ocr_pdf.py:1170-1183, 2309-2419;
@@ -105,8 +62,7 @@ LADDER_FIELD_COLS = ["total_amount", "currency", "invoice_date"]
 LADDER_MUST_FIELDS = ["total_amount"]  # mustNumOperacao analogue
 
 
-def _fields_for_pass(extracted: DataFrame, rung: dict,
-                     field_cols: list[str]) -> DataFrame:
+def _fields_for_pass(extracted: DataFrame, pass_no: int) -> DataFrame:
     """extraction(doc_id, spans) → one nullable-field row per doc tagged
     with the rung's pass_no — the per-rung leg of the ladder merge. Runs
     the REAL L13 field extractor over the rung's extracted text spans."""
@@ -119,38 +75,7 @@ def _fields_for_pass(extracted: DataFrame, rung: dict,
         F.col("s.text").alias("text"),
     )
     return extract_header_fields(lines).select(
-        "doc_id", F.lit(rung["pass_no"]).alias("pass_no"), *field_cols)
-
-
-def extract_ladder(documents: DataFrame, media_pages: DataFrame,
-                   ladder: list[dict] = RETRY_LADDER,
-                   field_cols: list[str] = LADDER_FIELD_COLS,
-                   must_fields: list[str] = LADDER_MUST_FIELDS,
-                   repeat_k: int = 3) -> DataFrame:
-    """R2 ladder END-TO-END in one lazy DAG: every rung is a real
-    ``extract`` pass with its own (conf, dpi), its fields come from the
-    real L13 extractor, and ``merge_retry_fields`` folds them keep-best
-    with ``<field>_pass`` provenance (util/ocr_pdf.py:2388-2402).
-
-    All rungs run over ALL documents (the bounded sweep, ≤3 passes);
-    ``cascade_ladder_committed`` is the production shape that restricts
-    each rung to the still-failing subset via committed snapshots — the
-    set-oriented analogue of the reference's per-document early exit.
-    Every input doc yields an output row (docs no rung could read merge
-    to all-null fields with must_ok=false), mirroring ``extract``'s
-    keep-every-doc contract."""
-    passes = None
-    for rung in ladder:
-        ext = extract(documents, media_pages, repeat_k,
-                      conf_threshold=rung["conf"], dpi=rung["dpi"],
-                      lang=rung.get("lang"), psm=rung.get("psm"))
-        leg = _fields_for_pass(ext, rung, field_cols)
-        passes = leg if passes is None else passes.unionByName(leg)
-    merged = merge_retry_fields(passes, field_cols, must_fields=must_fields)
-    return (
-        documents.select("doc_id").join(merged, "doc_id", "left")
-        .withColumn("must_ok", F.coalesce(F.col("must_ok"), F.lit(False)))
-    )
+        "doc_id", F.lit(pass_no).alias("pass_no"), *LADDER_FIELD_COLS)
 
 
 def merge_retry_fields(passes: DataFrame, field_cols: list[str],
@@ -183,79 +108,46 @@ def merge_retry_fields(passes: DataFrame, field_cols: list[str],
     return out
 
 
-def cascade_committed(
-    spark: SparkSession,
-    documents: DataFrame,
-    media_pages: DataFrame,
-    out_dir: str,
-    retry_conf: int = RETRY_CONF_THRESHOLD,
-    repeat_k: int = 3,
-) -> DataFrame:
-    """Production shape: commit pass 1 as a snapshot, derive the failed
-    subset from the committed table, commit the retried docs as a second
-    snapshot. The canonical table is the latest-wins snapshot view —
-    retried rows supersede their pass-1 rows by snapshot sequence, the
-    canonical location always reflects the corrected state, and each
-    pass stays resumable/auditable on its own."""
-    from .snapshot import read_snapshots_latest, snapshot_append
-
-    table = f"{out_dir}/documents_extracted"
-    snapshot_append(extract(documents, media_pages, repeat_k), table)
-    committed = read_snapshots_latest(spark, table)
-    # Retry only docs whose INPUT contains media spans: a doc with no
-    # media and no surviving text (empty / all-boilerplate digital text)
-    # is terminal — re-extracting it can't change the result, and without
-    # this guard every invocation would append a pointless new snapshot
-    # for the same doc ids forever.
-    retryable = documents.where(_has_media()).select("doc_id")
-    failed_ids = (
-        committed.where(~_has_text()).select("doc_id")
-        .join(retryable, "doc_id", "left_semi")
-    )
-    if failed_ids.isEmpty():
-        return committed
-    retried = extract(
-        documents.join(failed_ids, "doc_id", "left_semi"),
-        media_pages, repeat_k, conf_threshold=retry_conf,
-    )
-    snapshot_append(retried, table)
-    return read_snapshots_latest(spark, table)
-
-
 def cascade_ladder_committed(
     spark: SparkSession,
     documents: DataFrame,
     media_pages: DataFrame,
     out_dir: str,
     ladder: list[dict] = RETRY_LADDER,
-    field_cols: list[str] = LADDER_FIELD_COLS,
-    must_fields: list[str] = LADDER_MUST_FIELDS,
-    repeat_k: int = 3,
 ) -> DataFrame:
-    """Production ladder (util/ocr_pdf.py:1170-1183 sweep + 2388-2402
+    """R2, the retry ladder (util/ocr_pdf.py:1170-1183 sweep + 2388-2402
     keep-best, set-oriented): rung 1 extracts every doc; each later rung
     extracts ONLY the docs still failing the must-field gate after the
     merge-so-far — the per-document early exit as an anti-join, no
-    driver-side loop over docs. Each rung's field rows commit as a
-    snapshot of ``fields_passes`` (auditable per rung, resumable: a crash
-    between rungs resumes from the committed passes); the final
-    keep-best merge — with ``<field>_pass`` provenance columns — commits
-    to ``fields_ladder``, so the committed table records which rung won
-    every field. A doc is DONE for rung p iff it is already recovered
-    (must_ok) OR it already has a committed row at pass_no ≥ p — the
-    second leg makes unrecoverable docs terminal once every rung has
-    tried them (without it, a corpus with any hopeless doc re-extracts
-    it at all rungs on every re-run and the snapshot tables grow without
-    bound — r5 review finding). A completed ladder re-run is therefore a
-    metadata-only no-op (per-rung isEmpty checks, ≤ len(ladder) bounded
-    driver actions, and the final ``fields_ladder`` append is skipped);
-    a crash between rungs resumes exactly at the first rung whose pass
-    rows are missing. Duplicate (doc, pass_no) rows cannot be appended
-    under this rule, and would in any case merge to identical values
-    (same configuration ⇒ same extraction)."""
+    driver-side loop over docs — and only those whose INPUT has a
+    ``kind='media'`` span: rungs vary only OCR settings, so a text-only
+    doc comes out the same at every rung and is terminal after rung 1.
+    Each rung's field rows commit as a snapshot of ``fields_passes``
+    (auditable per rung, resumable: a crash between rungs resumes from
+    the committed passes); the final keep-best merge — with
+    ``<field>_pass`` provenance columns — commits to ``fields_ladder``,
+    so the committed table records which rung won every field. A doc is
+    DONE for rung p iff it is already recovered (must_ok) OR it already
+    has a committed row at pass_no ≥ p — the second leg makes
+    unrecoverable docs terminal once every rung has tried them (without
+    it, a corpus with any hopeless doc re-extracts it at all rungs on
+    every re-run and the snapshot tables grow without bound). A
+    completed ladder re-run is therefore a metadata-only no-op (per-rung
+    isEmpty checks, ≤ len(ladder) bounded driver actions, and the final
+    ``fields_ladder`` append is skipped); a crash between rungs resumes
+    exactly at the first rung whose pass rows are missing. Duplicate
+    (doc, pass_no) rows cannot be appended under this rule, and would in
+    any case merge to identical values (same configuration ⇒ same
+    extraction)."""
     from .snapshot import committed_snapshots, read_snapshots, snapshot_append
 
+    def merged(passes: DataFrame) -> DataFrame:
+        return merge_retry_fields(passes, LADDER_FIELD_COLS,
+                                  must_fields=LADDER_MUST_FIELDS)
+
     passes_table = f"{out_dir}/fields_passes"
+    retryable = documents.where(
+        F.exists("spans", lambda s: s["kind"] == "media"))
     todo = documents
     appended_any = False
     for rung in ladder:
@@ -265,27 +157,25 @@ def cascade_ladder_committed(
         # appends a duplicate pass-1 snapshot (ADVICE r4).
         if rung["pass_no"] > 1 or committed_snapshots(passes_table):
             committed = read_snapshots(spark, passes_table)
-            recovered = merge_retry_fields(
-                committed, field_cols, must_fields=must_fields
-            ).where(F.col("must_ok")).select("doc_id")
+            recovered = merged(committed).where(
+                F.col("must_ok")).select("doc_id")
             tried_this_rung = committed.where(
                 F.col("pass_no") >= rung["pass_no"]).select("doc_id")
             done = recovered.unionByName(tried_this_rung)
-            todo = documents.join(done, "doc_id", "left_anti")
+            todo = (documents if rung["pass_no"] == 1 else retryable).join(
+                done, "doc_id", "left_anti")
             if todo.isEmpty():
                 # nothing new for THIS rung; later rungs may still have
                 # work (crash after rung p committed, before p+1 ran)
                 continue
-        ext = extract(todo, media_pages, repeat_k,
+        ext = extract(todo, media_pages,
                       conf_threshold=rung["conf"], dpi=rung["dpi"],
                       lang=rung.get("lang"), psm=rung.get("psm"))
-        snapshot_append(_fields_for_pass(ext, rung, field_cols), passes_table)
+        snapshot_append(_fields_for_pass(ext, rung["pass_no"]), passes_table)
         appended_any = True
-    merged = merge_retry_fields(
-        read_snapshots(spark, passes_table), field_cols,
-        must_fields=must_fields)
     final = (
-        documents.select("doc_id").join(merged, "doc_id", "left")
+        documents.select("doc_id")
+        .join(merged(read_snapshots(spark, passes_table)), "doc_id", "left")
         .withColumn("must_ok", F.coalesce(F.col("must_ok"), F.lit(False)))
     )
     ladder_table = f"{out_dir}/fields_ladder"

@@ -80,7 +80,7 @@ def snapshot_append(df: DataFrame, table_dir: str,
     # seq-named manifest fails if a concurrent writer took this seq, and
     # we retry with the next one. Without this, two writers racing the
     # read-modify-write (max+1) could commit duplicate seqs, making the
-    # latest-wins Window.orderBy(_seq desc) tie-break nondeterministic.
+    # commit order readers rely on ambiguous.
     # (max+1, NOT count: after expiry, count would reuse a live sequence
     # number and corrupt the lexicographic commit order.)
     while True:
@@ -133,30 +133,3 @@ def expire_snapshots(table_dir: str, keep_last: int = 10) -> list[str]:
             dropped.append(s["data_dir"])
     return dropped
 
-
-def read_snapshots_latest(spark: SparkSession, table_dir: str,
-                          key: str = "doc_id") -> "DataFrame | None":
-    """Latest-wins view: when the same key appears in multiple snapshots
-    (a correction/retry re-committed it), only the row from the
-    highest-sequence snapshot is visible — the MERGE-style upsert
-    semantics of the reference's DuplicateEntryError path
-    (ocr_import.py:74-75) without rewriting history."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    snaps = committed_snapshots(table_dir)
-    if not snaps:
-        return None
-    parts = [
-        spark.read.parquet(s["data_dir"]).withColumn("_seq", F.lit(s["seq"]))
-        for s in snaps
-    ]
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    w = Window.partitionBy(key).orderBy(F.col("_seq").desc())
-    return (
-        union.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_seq")
-    )

@@ -487,14 +487,22 @@ def test_lexicon_rescue_in_ocr_lines(spark):
     assert texts(dpi=250, lexicon=lexicon_for("deu")) == ["CLEAN TAXABLE"]
 
 
-def test_ladder_lang_rung_recovers_what_por_cannot(spark):
+def _ladder_row(spark, raw, pages, out_dir, rungs):
+    """The committed ladder's row for a one-doc corpus. Each ladder gets
+    its own out_dir, so resume cannot mix the rungs of two ladders."""
+    from angola_erp_ocr_spark.plans.cascade import cascade_ladder_committed
+
+    return cascade_ladder_committed(
+        spark, raw, pages, str(out_dir), ladder=rungs).first()
+
+
+def test_ladder_lang_rung_recovers_what_por_cannot(spark, tmp_path):
     """r5 VERDICT task 4 teeth: the winning pass of the TAXABLE class is
     determined by LANGUAGE — with the real ladder (rung 2 = eng) the must
     field lands at pass 2; with an all-por ladder at the SAME conf/dpi it
     is never recovered."""
     from angola_erp_ocr_spark.glyph import encode_page
-    from angola_erp_ocr_spark.plans.cascade import (RETRY_LADDER,
-                                                    extract_ladder)
+    from angola_erp_ocr_spark.plans.cascade import RETRY_LADDER
     from angola_erp_ocr_spark.schema import DOCUMENTS_RAW, MEDIA_PAGE
 
     words = []
@@ -511,14 +519,14 @@ def test_ladder_lang_rung_recovers_what_por_cannot(spark):
     pages = spark.createDataFrame([("page://d0/0", 0, blob, 150)],
                                   MEDIA_PAGE)
 
-    got = extract_ladder(raw, pages).first()
+    got = _ladder_row(spark, raw, pages, tmp_path / "real", RETRY_LADDER)
     assert got["total_amount"] == "104,00"
     assert got["total_amount_pass"] == 2      # rung 2 = lang 'eng'
     assert got["currency_pass"] == 1          # conf-80 words read at rung 1
     assert got["must_ok"]
 
     por_only = [{**r, "lang": "por"} for r in RETRY_LADDER]
-    got_por = extract_ladder(raw, pages, ladder=por_only).first()
+    got_por = _ladder_row(spark, raw, pages, tmp_path / "por", por_only)
     assert got_por["total_amount"] is None    # no gate/DPI can recover it
     assert not got_por["must_ok"]
 
@@ -597,7 +605,7 @@ def test_psm_resegmentation_in_ocr_lines(spark):
     assert lines(consistent, 6) == lines(consistent, 4)
 
 
-def test_ladder_rung4_recovers_skewed_low_conf_scan(spark):
+def test_ladder_rung4_recovers_skewed_low_conf_scan(spark, tmp_path):
     """r5 review finding: the re-segmenting rungs (psm 4/12) group by
     exact y and run no deskew, so a ROTATED low-confidence page that
     fails rung 1's gate shreds at rungs 2/3 — pre-psm it recovered at
@@ -607,8 +615,7 @@ def test_ladder_rung4_recovers_skewed_low_conf_scan(spark):
     import math
 
     from angola_erp_ocr_spark.glyph import encode_page
-    from angola_erp_ocr_spark.plans.cascade import (RETRY_LADDER,
-                                                    extract_ladder)
+    from angola_erp_ocr_spark.plans.cascade import RETRY_LADDER
     from angola_erp_ocr_spark.schema import DOCUMENTS_RAW, MEDIA_PAGE
 
     t = math.radians(3.0)
@@ -637,10 +644,10 @@ def test_ladder_rung4_recovers_skewed_low_conf_scan(spark):
         [("page://skew/0", 0, bytearray(encode_page(words)), 150)],
         MEDIA_PAGE)
 
-    got = extract_ladder(raw, media).collect()[0]
+    got = _ladder_row(spark, raw, media, tmp_path / "four", RETRY_LADDER)
     assert got["total_amount"] == "104,00"
     assert got["total_amount_pass"] == 4 and got["must_ok"]
 
     three_rungs = [r for r in RETRY_LADDER if r["pass_no"] <= 3]
-    old = extract_ladder(raw, media, ladder=three_rungs).collect()[0]
+    old = _ladder_row(spark, raw, media, tmp_path / "three", three_rungs)
     assert old["total_amount"] is None and not old["must_ok"]

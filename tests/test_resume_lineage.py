@@ -74,13 +74,12 @@ def test_fused_ocr_lines_matches_unfused(spark):
     assert unfused.exceptAll(fused).count() == 0
 
 
-def test_cascade_retry_recovers_low_conf_docs(spark):
-    """R2: a doc whose OCR words all fall below the default gate yields no
-    text spans in pass 1; the bounded retry (lower gate) recovers it."""
-    from pyspark.sql import types as T
-
+def test_extract_gate_drops_all_sub_gate_words(spark):
+    """R2's trigger: a doc whose OCR words all fall below the default gate
+    yields no text spans in pass 1, while a clean doc keeps its line (the
+    retry that recovers it is the committed ladder, pinned below)."""
     from angola_erp_ocr_spark.glyph import encode_page
-    from angola_erp_ocr_spark.plans.cascade import extract_with_retry
+    from angola_erp_ocr_spark.plans.pipeline import extract
     from angola_erp_ocr_spark.schema import DOCUMENTS_RAW, MEDIA_PAGE
 
     words = [dict(x=40, y=10, w=30, h=12, conf=15, block=0, par=0, line=0,
@@ -98,15 +97,9 @@ def test_cascade_retry_recovers_low_conf_docs(spark):
          ("page://hi/0", 0, bytearray(encode_page(good)), 150)],
         MEDIA_PAGE)
 
-    from angola_erp_ocr_spark.plans.pipeline import extract
     first = {r["doc_id"]: r["spans"] for r in extract(docs, media).collect()}
     assert all(s["kind"] == "media" for s in first["low"])  # gate dropped all
-
-    out = {r["doc_id"]: r["spans"] for r in
-           extract_with_retry(docs, media).collect()}
-    low_texts = [s["text"] for s in out["low"] if s["kind"] == "text"]
-    assert low_texts == ["FRACO SCAN"]
-    hi_texts = [s["text"] for s in out["hi"] if s["kind"] == "text"]
+    hi_texts = [s["text"] for s in first["hi"] if s["kind"] == "text"]
     assert hi_texts == ["BOM"]
 
 
@@ -114,7 +107,10 @@ def test_cascade_ladder_committed_runs_real_rungs(spark, tmp_path):
     """R2 ladder, production shape: each RETRY_LADDER rung is a real
     extract pass (rung conf gate + DPI resolution model), later rungs run
     only over still-failing docs (committed anti-join early exit), and the
-    committed fields_ladder table carries <field>_pass provenance."""
+    committed fields_ladder table carries <field>_pass provenance. A
+    text-only doc is tried at rung 1 only (rungs vary only OCR settings),
+    and a doc whose must field reads at rung 1 exits there even though a
+    later rung could fill its other fields."""
     from angola_erp_ocr_spark.glyph import encode_page
     from angola_erp_ocr_spark.plans.cascade import cascade_ladder_committed
     from angola_erp_ocr_spark.plans.snapshot import (committed_snapshots,
@@ -137,13 +133,24 @@ def test_cascade_ladder_committed_runs_real_rungs(spark, tmp_path):
         did, cls = f"d{i}", i % 4
         docs.append((did, None, [("media", "", f"page://{did}/0", 0)]))
         media.append((f"page://{did}/0", 0, page(cls), 150))
+    # text-only: no must field, and no rung can change its extraction
+    docs.append(("text", None, [("text", "10,10|NOTA INTERNA", None, 0)]))
+    # early exit: the must field reads at rung 1; AKZ (conf 25) would
+    # read at rung 2, but the doc is done after rung 1
+    docs.append(("early", None, [("media", "", "page://early/0", 0)]))
+    media.append(("page://early/0", 0, bytearray(encode_page([
+        dict(x=40 + 70 * i, y=10, w=60, h=12, conf=c, block=0, par=0,
+             line=0, word_idx=i, text=t)
+        for i, (t, c) in enumerate(
+            [("TOTAL", 80), ("104,00", 80), ("AKZ", 25)])
+    ])), 150))
     raw = spark.createDataFrame(docs, DOCUMENTS_RAW).select("doc_id", "spans")
     pages = spark.createDataFrame(media, MEDIA_PAGE)
 
     out = str(tmp_path / "ladder")
     final = {r["doc_id"]: r for r in
              cascade_ladder_committed(spark, raw, pages, out).collect()}
-    assert len(final) == 8
+    assert len(final) == 10
     for i in range(8):
         did, cls = f"d{i}", i % 4
         r = final[did]
@@ -166,9 +173,17 @@ def test_cascade_ladder_committed_runs_real_rungs(spark, tmp_path):
     assert by_pass[3].isdisjoint({"d0", "d4", "d1", "d5"})
     assert by_pass[4] == {"d3", "d7"}              # only the hopeless reach 4
 
+    rows = read_snapshots(spark, f"{out}/fields_passes").collect()
+    assert [r["pass_no"] for r in rows if r["doc_id"] == "text"] == [1]
+    assert not final["text"]["must_ok"]
+    assert [r["pass_no"] for r in rows if r["doc_id"] == "early"] == [1]
+    assert final["early"]["total_amount"] == "104,00"
+    assert final["early"]["total_amount_pass"] == 1
+    assert final["early"]["currency"] is None and final["early"]["must_ok"]
+
     # the committed fields_ladder table is the returned view
     tbl = read_snapshots(spark, f"{out}/fields_ladder")
-    assert tbl.count() == 8
+    assert tbl.count() == 10
 
     # re-running a completed ladder whose corpus contains UNRECOVERABLE
     # docs must also be a no-op (r5 review finding: a must_ok-only done
@@ -418,27 +433,13 @@ def test_snapshot_seq_after_expiry(spark, tmp_path):
     assert seqs == sorted(seqs) == [2, 3]
 
 
-def test_read_snapshots_latest_wins(spark, tmp_path):
-    from angola_erp_ocr_spark.plans.snapshot import (
-        read_snapshots_latest, snapshot_append)
-
-    table = str(tmp_path / "tbl")
-    v1 = spark.createDataFrame([("a", 1), ("b", 1)], ["doc_id", "v"])
-    v2 = spark.createDataFrame([("b", 2)], ["doc_id", "v"])
-    snapshot_append(v1, table)
-    snapshot_append(v2, table)
-    got = {r["doc_id"]: r["v"]
-           for r in read_snapshots_latest(spark, table).collect()}
-    assert got == {"a": 1, "b": 2}
-
-
 def test_snapshot_seq_claim_is_atomic(spark, tmp_path):
     """A concurrent writer's in-flight claim (manifest file exists, JSON
     not yet written) must neither crash readers nor be reallocated."""
     import os
 
     from angola_erp_ocr_spark.plans.snapshot import (
-        committed_snapshots, read_snapshots_latest, snapshot_append)
+        committed_snapshots, read_snapshots, snapshot_append)
 
     table = str(tmp_path / "t")
     df = spark.createDataFrame([("d1", 1)], ["doc_id", "v"])
@@ -453,8 +454,8 @@ def test_snapshot_seq_claim_is_atomic(spark, tmp_path):
     m2 = snapshot_append(spark.createDataFrame([("d1", 2)], ["doc_id", "v"]),
                          table)
     assert m2["seq"] == 2       # claimed seq 1 was NOT reallocated
-    latest = read_snapshots_latest(spark, table)
-    assert latest.first()["v"] == 2   # latest-wins unaffected
+    got = sorted(r["v"] for r in read_snapshots(spark, table).collect())
+    assert got == [1, 2]        # the empty claim hides no committed data
 
 
 def test_cascade_ladder_committed_rerun_is_noop_when_all_recovered(
