@@ -17,7 +17,7 @@ decode) — Arrow-vectorized ``mapInPandas`` stages. No per-row Python UDFs.
 Modules
 -------
 session     tuned SparkSession builder (AQE, Arrow, shuffle partitions)
-schema      span/word/rule StructTypes + doc-class registry
+schema      span/word/page StructTypes + doc-class keyword routing
 synth       deterministic seeded corpus generator (interleaved text+media)
 functions.normalize   P1–P13 predicates & OCR-confusion normalizers
 operators.layout      L1–L8 reading order / row–column detection / boilerplate
@@ -31,7 +31,7 @@ operators.multimodal  binary media columns: metadata, stubbed decoders
 plans.pipeline        end-to-end extract(): route → parse/OCR → order → emit
 plans.cascade         R1/R2 cheap-path-first routing + committed retry ladder
 plans.lineage         per-partition lineage rows (resume / skew audit)
-sources.tables        S1 path resolution, binaryFile ingest, lake sinks
+sources.tables        S1 path resolution, lake sinks, CSV debug sink
 streaming.incremental Structured Streaming foreachBatch wrapper
 glyph                 columnar page codec (rendered-image stand-in)
 """

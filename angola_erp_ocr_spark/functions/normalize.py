@@ -48,10 +48,6 @@ MONTH_RULES: list[tuple[str, str]] = [
 
 MONTHS_RE = "|".join(p for p, _ in MONTH_RULES)
 
-# flat view (order preserved: core first, then months) for consumers that
-# want the full rule table
-NORMALIZE_RULES: list[tuple[str, str]] = CORE_RULES + MONTH_RULES
-
 
 def _render(repl: str, dialect: str) -> str:
     """Render ``<n>`` placeholders for a regex-replacement dialect."""
@@ -112,7 +108,6 @@ def normalize_sql(expr: str) -> str:
 CASH_RE = r"\d{1,3}([. ]\d{3})*,\d{2}|\d{1,3}(,\d{3})*\.\d{2}"
 DATE_RE = r"\d{4}/\d{2}/\d{2}|\d{2}-\d{2}-\d{4}"
 IBAN_RE = r"AO06(\.\d{2,4}){5}\.\d{1,2}|AO06( ?\d{4}){5} ?\d"
-NIF_RE = r"\d{10}"
 SERIES_RE = r"(FT|FR|PP|FTM)[ /][A-Z0-9]+[ /]?\d{2,4}/\d+"
 AVOID_RE = (
     r"ORIGINAL|2!VIA|2ªVIA|2º ?VIA|DUPLICADO|TELEF\.|"

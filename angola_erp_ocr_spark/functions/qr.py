@@ -248,7 +248,6 @@ def _deinterleave(seq: list[int], lengths: list[int]) -> list[list[int]]:
                 blocks[bi].append(next(it))
     return blocks
 _ECL_BITS = {"L": 1, "M": 0, "Q": 3, "H": 2}
-_BITS_ECL = {v: k for k, v in _ECL_BITS.items()}
 
 # Segment modes (ISO 18004 8.4) and their count-field widths at V1-9.
 # Versions <= 6 all sit in the V1-9 count-width class, so the widths

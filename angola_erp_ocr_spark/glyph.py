@@ -23,6 +23,7 @@ stage chews through millions of words per Arrow batch:
 from __future__ import annotations
 
 import struct
+from contextlib import contextmanager
 
 import numpy as np
 
@@ -101,7 +102,8 @@ def encode_page(words: list[dict]) -> bytes:
 
 
 def decode_page_columns(blob: bytes) -> tuple[np.ndarray, list[str]]:
-    """Fast columnar decode → (structured header array, word texts)."""
+    """One page → (structured header array, word texts): the test oracle
+    for ``decode_batch_columns`` and the body of ``decode_page``."""
     magic, n = _HDR.unpack_from(blob, 0)
     if magic != MAGIC:
         raise ValueError("not a glyph grid")
@@ -118,7 +120,7 @@ def decode_page_columns(blob: bytes) -> tuple[np.ndarray, list[str]]:
 def _reject_first(bad: np.ndarray, reason: str) -> None:
     """Raise ValueError for the first page flagged in ``bad``; its index
     into the batch rides on the exception as ``page_index`` so the caller
-    can name the page (``ocr.ocr_lines``)."""
+    can name the page (``naming_bad_page``)."""
     if bad.any():
         i = int(np.argmax(bad))
         err = ValueError(f"batch page {i}: {reason}")
@@ -126,11 +128,29 @@ def _reject_first(bad: np.ndarray, reason: str) -> None:
         raise err
 
 
+@contextmanager
+def naming_bad_page(media_refs, page_nos):
+    """Re-raise a ``_reject_first`` error from the enclosed decode with the
+    bad page named by its ``media_ref`` and ``page_no`` (the batch's
+    columns, in ``blobs`` order). Every glyph stage decodes under this."""
+    try:
+        yield
+    except ValueError as e:
+        i = getattr(e, "page_index", None)
+        if i is None:
+            raise
+        raise ValueError(
+            f"bad glyph page media_ref={list(media_refs)[i]!r} "
+            f"page_no={int(list(page_nos)[i])}: {e}") from e
+
+
 def decode_batch_columns(blobs) -> tuple:
-    """Vectorized GG02 decode of MANY pages at once — the OCR stage's hot
-    path (``ocr.ocr_lines``). Amortizes numpy call overhead over the whole
-    Arrow batch: per-page decode costs ~75 µs in tiny-array numpy calls;
-    this path does ONE fancy-gather + ONE segmented cumsum for the batch.
+    """Vectorized GG02 decode of MANY pages at once — the one decoder of
+    every glyph stage (``ocr.ocr_words``, ``ocr.ocr_lines``,
+    ``multimodal.annotate_pages``). Amortizes numpy call overhead over the
+    whole Arrow batch: per-page decode costs ~75 µs in tiny-array numpy
+    calls; this path does ONE fancy-gather + ONE segmented cumsum for the
+    batch.
 
     ``blobs``: sequence of P page blobs (bytes). ALL must be well-formed
     GG02: a bad magic or a truncated header or text region raises

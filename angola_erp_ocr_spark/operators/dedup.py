@@ -20,7 +20,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MERSENNE31 = 2147483647  # (a*h + b) % p arithmetic stays < 2^62: no overflow
@@ -107,19 +107,6 @@ def minhash_signature(col: Column, k: int = 16, n: int = 3) -> Column:
     """Single-expression form (convenience; see minhash_from_hashes for
     the two-step form used in the hot paths)."""
     return minhash_from_hashes(shingle_hashes(col, n), k)
-
-
-def lsh_bands(sig_col: Column, bands: int = 4, rows: int = 4) -> Column:
-    """Signature → array of (band_idx, band_key) structs; band_key is the
-    md5 of the band's joined values (cross-engine stable)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.md5(F.array_join(F.slice(sig_col, b * rows + 1, rows), ","))
-            .alias("key"),
-        ),
-    )
 
 
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",

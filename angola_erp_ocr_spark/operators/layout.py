@@ -80,7 +80,8 @@ def cluster_rows_by_gap(
 # ---------------------------------------------------------------------------
 # L1 — column detection. Two modes, as in the reference:
 #  (a) fixed x-range template buckets (api/util.py:2400-2445)
-#  (b) data-driven x-gap clustering (generalizes the hard-coded ranges)
+#  (b) data-driven x-gap clustering (generalizes the hard-coded ranges):
+#      cluster_rows_by_gap(df, scope, "x", gap, out_col="col_id")
 # ---------------------------------------------------------------------------
 
 def bucket_columns_fixed(df: DataFrame, ranges: list[tuple[str, float, float]],
@@ -90,12 +91,6 @@ def bucket_columns_fixed(df: DataFrame, ranges: list[tuple[str, float, float]],
     for name, lo, hi in reversed(ranges):
         expr = F.when(F.col(x_col).between(lo, hi), F.lit(name)).otherwise(expr)
     return df.withColumn("col_id", expr)
-
-
-def detect_columns_by_xgap(df: DataFrame, scope: list[str], gap: float = 24.0) -> DataFrame:
-    """Cluster cell x-coordinates into column ids by gap detection — the
-    data-driven replacement for the reference's per-template x ranges."""
-    return cluster_rows_by_gap(df, scope, "x", gap, out_col="col_id")
 
 
 # ---------------------------------------------------------------------------

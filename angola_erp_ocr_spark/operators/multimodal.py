@@ -20,6 +20,7 @@ import hashlib
 import struct
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,13 +37,6 @@ try:  # pragma: no cover - not present in this container
     HAS_PYZBAR = True
 except ImportError:
     HAS_PYZBAR = False
-
-MEDIA_META = T.StructType([
-    T.StructField("media_ref", T.StringType(), False),
-    T.StructField("media_type", T.StringType(), True),   # image|audio|video
-    T.StructField("n_bytes", T.LongType(), True),
-    T.StructField("sha256", T.StringType(), True),
-])
 
 IMAGE_FEATURES = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
@@ -337,19 +331,18 @@ def decode_qr_media(df: DataFrame, ref_col: str = "media_ref",
 
 AN_MAGIC = b"AN01"
 _AN_HDR = struct.Struct("<4sH")
-_AN_REC = struct.Struct("<HHHHB")
+_AN_REC = np.dtype([("x", "<u2"), ("y", "<u2"), ("w", "<u2"), ("h", "<u2"),
+                    ("kind", "u1")])
 ANNOT_HIGHLIGHT = 0
 ANNOT_REDACT = 1
 
 
-def encode_annotations(rects: list[tuple[int, int, int, int, int]]) -> bytes:
-    """rects: (x, y, w, h, kind) — uint16 coords, uint8 kind."""
+def encode_annotations(rects: np.ndarray) -> bytes:
+    """rects: ``_AN_REC`` records (x, y, w, h: uint16; kind: uint8)."""
     if len(rects) > 65535:
         raise ValueError("too many annotations")
-    body = b"".join(_AN_REC.pack(*r) for r in rects)
-    chk = 0
-    for b in body:
-        chk ^= b
+    body = rects.tobytes()
+    chk = int(np.bitwise_xor.reduce(np.frombuffer(body, np.uint8)))
     return _AN_HDR.pack(AN_MAGIC, len(rects)) + body + bytes([chk])
 
 
@@ -360,20 +353,15 @@ def decode_annotations_at(blob: bytes, off: int) -> list[dict] | None:
     magic, n = _AN_HDR.unpack_from(blob, off)
     if magic != AN_MAGIC:
         return None
-    body_end = off + _AN_HDR.size + n * _AN_REC.size
+    body_end = off + _AN_HDR.size + n * _AN_REC.itemsize
     if len(blob) < body_end + 1:
         return None
     body = blob[off + _AN_HDR.size:body_end]
-    chk = 0
-    for b in body:
-        chk ^= b
-    if chk != blob[body_end]:
+    if int(np.bitwise_xor.reduce(np.frombuffer(body, np.uint8))) \
+            != blob[body_end]:
         return None
-    out = []
-    for i in range(n):
-        x, y, w, h, kind = _AN_REC.unpack_from(body, i * _AN_REC.size)
-        out.append(dict(x=x, y=y, w=w, h=h, kind=kind))
-    return out
+    return [dict(x=x, y=y, w=w, h=h, kind=kind)
+            for x, y, w, h, kind in np.frombuffer(body, _AN_REC).tolist()]
 
 
 def walk_page_extras(blob: bytes) -> dict:
@@ -403,7 +391,7 @@ def walk_page_extras(blob: bytes) -> dict:
             if ann is None:
                 break
             out["annotations"] = ann
-            off += _AN_HDR.size + len(ann) * _AN_REC.size + 1
+            off += _AN_HDR.size + len(ann) * _AN_REC.itemsize + 1
         else:
             break
     return out
@@ -411,50 +399,47 @@ def walk_page_extras(blob: bytes) -> dict:
 
 def annotate_pages(media_pages: DataFrame,
                    conf_threshold: int = 30,
-                   redact_below: int = 0,
-                   ref_col: str = "media_ref",
-                   blob_col: str = "glyph_grid") -> DataFrame:
+                   redact_below: int = 0) -> DataFrame:
     """K4 (util/ocr_pdf.py:575-599): emit annotated page blobs — the word
     boxes failing the confidence gate get HIGHLIGHT rects (the reviewer
     sees exactly what OCR couldn't read), boxes at/below ``redact_below``
-    get REDACT rects. Arrow-batched; the original blob is preserved
-    byte-for-byte with the AN01 container appended, so every downstream
-    decoder (words, QR) still works on the annotated page."""
-    from ..glyph import decode_page_columns
+    get REDACT rects. Arrow-batched: one ``decode_batch_columns`` call and
+    one rect mask per batch; the original blob is preserved byte-for-byte
+    with the AN01 container appended, so every downstream decoder (words,
+    QR) still works on the annotated page."""
+    from ..glyph import CONF_NOWORD, decode_batch_columns, naming_bad_page
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            refs, blobs, counts = [], [], []
-            for ref, blob in zip(pdf[ref_col], pdf[blob_col]):
-                blob = bytes(blob)
-                hdr, _texts = decode_page_columns(blob)
-                rects = []
-                for i in range(len(hdr)):
-                    conf = int(hdr["conf"][i])
-                    if conf == 255:  # the -1 sentinel: not a word
-                        continue
-                    if conf <= redact_below:
-                        kind = ANNOT_REDACT
-                    elif conf <= conf_threshold:
-                        kind = ANNOT_HIGHLIGHT
-                    else:
-                        continue
-                    rects.append((int(hdr["x"][i]), int(hdr["y"][i]),
-                                  int(hdr["w"][i]), int(hdr["h"][i]), kind))
-                refs.append(ref)
-                blobs.append(bytearray(blob + encode_annotations(rects))
-                             if rects else bytearray(blob))
-                counts.append(len(rects))
-            yield pd.DataFrame({"media_ref": refs,
-                                "annotated": blobs,
-                                "n_annotations": counts})
+            blobs = [bytes(b) for b in pdf["glyph_grid"]]
+            with naming_bad_page(pdf["media_ref"], pdf["page_no"]):
+                word_page, hdr, *_ = decode_batch_columns(blobs)
+            conf = hdr["conf"].astype(np.int32)
+            sel = ((conf != CONF_NOWORD)  # the -1 sentinel: not a word
+                   & (conf <= max(conf_threshold, redact_below)))
+            rects = np.empty(int(sel.sum()), dtype=_AN_REC)
+            for f in ("x", "y", "w", "h"):
+                rects[f] = hdr[f][sel]
+            rects["kind"] = np.where(conf[sel] <= redact_below,
+                                     ANNOT_REDACT, ANNOT_HIGHLIGHT)
+            # words are page-contiguous: page p's rects are rects[b[p]:b[p+1]]
+            b = np.searchsorted(word_page[sel], np.arange(len(blobs) + 1))
+            annotated = [
+                bytearray(blob + encode_annotations(rects[s:e]) if e > s
+                          else blob)
+                for blob, s, e in zip(blobs, b[:-1].tolist(), b[1:].tolist())
+            ]
+            yield pd.DataFrame({"media_ref": pdf["media_ref"],
+                                "annotated": annotated,
+                                "n_annotations": np.diff(b).astype(np.int32)})
 
     schema = T.StructType([
         T.StructField("media_ref", T.StringType(), False),
         T.StructField("annotated", T.BinaryType(), False),
         T.StructField("n_annotations", T.IntegerType(), False),
     ])
-    return media_pages.select(ref_col, blob_col).mapInPandas(run, schema)
+    return media_pages.select("media_ref", "page_no", "glyph_grid") \
+        .mapInPandas(run, schema)
 
 
 def sample_frames(df: DataFrame, every_n: int = 10, ref_col: str = "media_ref",

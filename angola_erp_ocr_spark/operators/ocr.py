@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 import numpy as np
 
-from ..glyph import conf_signed, decode_page_columns
+from ..glyph import conf_signed, decode_batch_columns, naming_bad_page
 from ..schema import WORD_BOX
 
 CONF_THRESHOLD = 30  # util/ocr_pdf.py:390-392
@@ -71,44 +71,29 @@ RESEGMENT_PSMS = frozenset({4, 12})
 SKEW_SPREAD_PX = 2
 SKEW_MIN_SLOPE = 0.01
 
-_INT_FIELDS = ("block", "par", "line", "word_idx", "conf", "x", "y", "w", "h")
-
-
-def _decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Decode one Arrow batch of glyph-grid pages into word rows.
-
-    Vectorized: each page decodes via one ``np.frombuffer`` (glyph.py
-    GG02); per-page column arrays concatenate into the batch DataFrame —
-    no per-word Python in the hot path."""
-    headers, texts, refs, pages = [], [], [], []
-    for media_ref, page_no, blob in zip(pdf["media_ref"], pdf["page_no"],
-                                        pdf["glyph_grid"]):
-        hdr, txt = decode_page_columns(bytes(blob))
-        headers.append(hdr)
-        texts.extend(txt)
-        refs.append(np.full(len(hdr), media_ref, dtype=object))
-        pages.append(np.full(len(hdr), int(page_no), dtype=np.int32))
-    if not headers:
-        return pd.DataFrame(
-            {k: [] for k in ("media_ref", "page_no", "block", "par", "line",
-                             "word_idx", "text", "conf", "x", "y", "w", "h")})
-    h = np.concatenate(headers)
-    out = {"media_ref": np.concatenate(refs), "page_no": np.concatenate(pages)}
-    for k in ("block", "par", "line", "word_idx"):
-        out[k] = h[k].astype(np.int32)
-    out["text"] = texts
-    out["conf"] = conf_signed(h["conf"])  # 255 → -1 (glyph.CONF_NOWORD)
-    for k in ("x", "y", "w", "h"):
-        out[k] = h[k].astype(np.int32)
-    return pd.DataFrame(out)
-
 
 def ocr_words(media_pages: DataFrame) -> DataFrame:
-    """media_pages(media_ref, page_no, glyph_grid, dpi) → word table (D3)."""
+    """media_pages(media_ref, page_no, glyph_grid, ...) → word table (D3).
+
+    One ``decode_batch_columns`` call per Arrow batch; the word texts are
+    strict UTF-8 and conf=-1 (glyph.CONF_NOWORD) comes back as -1."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield _decode_batch(pdf)
+            with naming_bad_page(pdf["media_ref"], pdf["page_no"]):
+                word_page, hdr, tstart, tend, joined, _ = \
+                    decode_batch_columns([bytes(b) for b in pdf["glyph_grid"]])
+            page_no = pdf["page_no"].to_numpy().astype(np.int32)
+            out = {"media_ref": pdf["media_ref"].to_numpy()[word_page],
+                   "page_no": page_no[word_page]}
+            for k in ("block", "par", "line", "word_idx"):
+                out[k] = hdr[k].astype(np.int32)
+            out["text"] = [joined[s:e].decode("utf-8")
+                           for s, e in zip(tstart.tolist(), tend.tolist())]
+            out["conf"] = conf_signed(hdr["conf"])
+            for k in ("x", "y", "w", "h"):
+                out[k] = hdr[k].astype(np.int32)
+            yield pd.DataFrame(out)
 
     return media_pages.select("media_ref", "page_no", "glyph_grid").mapInPandas(
         run, schema=WORD_BOX
@@ -293,7 +278,6 @@ def ocr_lines(media_pages: DataFrame, passthrough: tuple[str, ...] = (),
     """
     from pyspark.sql import types as T
 
-    from ..glyph import decode_batch_columns
     from .multimodal import extract_qr_at
     from .raster import estimate_skew_boxes
 
@@ -333,8 +317,9 @@ def ocr_lines(media_pages: DataFrame, passthrough: tuple[str, ...] = (),
         tiny-array numpy calls per page — measured 75 µs/page → <15 µs/page
         on the bench corpus (pages average ~20 words)."""
         blobs = [bytes(b) for b in pdf["glyph_grid"]]
-        word_page, hdr, tstart, tend, joined, rel_end = \
-            decode_batch_columns(blobs)
+        with naming_bad_page(pdf["media_ref"], pdf["page_no"]):
+            word_page, hdr, tstart, tend, joined, rel_end = \
+                decode_batch_columns(blobs)
         # conf gate (255-encoded conf=-1 must not pass; two uint8 compares)
         keepm = (hdr["conf"] > conf_threshold) & (hdr["conf"] != 255)
         if dpi is not None:  # resolution model (see MIN_GLYPH_PX)
@@ -453,16 +438,6 @@ def ocr_lines(media_pages: DataFrame, passthrough: tuple[str, ...] = (),
         return pd.DataFrame(out)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            try:
-                out = run_batch(pdf)
-            except ValueError as e:
-                i = getattr(e, "page_index", None)  # glyph._reject_first
-                if i is None:
-                    raise
-                raise ValueError(
-                    f"bad glyph page media_ref={pdf['media_ref'].iat[i]!r} "
-                    f"page_no={int(pdf['page_no'].iat[i])}: {e}") from e
-            yield out
+        return map(run_batch, batches)
 
     return media_pages.select(*cols).mapInPandas(run, schema=schema)

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import MERSENNE31, text_hash60
+from .dedup import text_hash60
 
 
 def _as_double(col: Column) -> Column:

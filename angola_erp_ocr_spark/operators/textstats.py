@@ -38,13 +38,6 @@ def _marker_hits(toks: Column, markers: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def lang_hit_columns(col: Column) -> list[Column]:
-    """Per-language marker-hit counts (the langid feature vector)."""
-    toks = words(col)
-    return [_marker_hits(toks, LANG_MARKERS[lang]).alias(f"hits_{lang}")
-            for lang in LANG_ORDER]
-
-
 def lang_id(col: Column) -> Column:
     """argmax marker-hit language, priority order on ties; 'und' if 0 hits."""
     toks = words(col)

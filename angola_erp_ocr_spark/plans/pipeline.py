@@ -14,18 +14,18 @@ One declarative DAG (SURVEY §3.1 "Spark restatement"):
       → union candidates → AVOID_RE flag per row (still in the parallel
         scan and OCR tasks)
       → repartition(doc_id), then the repeated-block count window
-        (partitionBy doc_id, text), the segment window and the
-        total-order window (both partitionBy doc_id) run on that single
-        exchange — hashpartitioning(doc_id) satisfies the clustered
-        distribution of the (doc_id, text) window, so EnsureRequirements
-        adds sorts only
+        (partitionBy doc_id, text) and the segment window (partitionBy
+        doc_id) run on that single exchange — hashpartitioning(doc_id)
+        satisfies the clustered distribution of the (doc_id, text)
+        window, so EnsureRequirements adds sorts only
       → boilerplate strip (AVOID flag + repeated-block ≥k per doc)
       → segment key: running max of marker offsets in (offset, rank)
         order
-      → total order (seg, rank, y, x) → offsets → array<span> per doc
-        (final groupBy(doc_id) reuses the same partitioning: no
-        exchange); anchors order last and collect_list drops them, so
-        every doc gets exactly one row
+      → array<span> per doc, sorted by (seg, rank, y, x, text) inside
+        the final groupBy(doc_id) and numbered by array position (the
+        aggregation reuses the same partitioning: no exchange); the
+        anchors' null entries are dropped by collect_list, so every doc
+        gets exactly one row
 
 Scale notes (100 TB / 10^12 docs):
   * The unit of parallelism through the OCR stage is the *page*, not the
@@ -33,9 +33,9 @@ Scale notes (100 TB / 10^12 docs):
     grouping, so heavy docs can't capsize a task (SURVEY §4 skew defense).
   * Hash exchanges (1): the post-union doc_id exchange, which carries the
     parsed candidates plus one anchor row per doc and serves the
-    repeat-count window, the segment window, the total order and the
-    assembly. The raw table is scanned 2 times: span rows (with the
-    anchors) and markers. Verified with .explain("formatted").
+    repeat-count window, the segment window and the ordered assembly.
+    The raw table is scanned 2 times: span rows (with the anchors) and
+    markers. Verified with .explain("formatted").
   * Joins: markers↔media_pages is an equi-join on media_ref (unique per
     page, no hot keys), planned as a broadcast of the marker side.
   * Everything outside the single mapInPandas stage is whole-stage
@@ -159,9 +159,8 @@ def extract(documents: DataFrame, media_pages: DataFrame | None = None,
     # parallel scan and OCR tasks, as a flag (a filter here would be pushed
     # into the OCR branch and evaluate normalize_col twice). Then ONE
     # exchange for everything downstream: repeat-count window (doc_id,
-    # text), boilerplate filter, segment window, total-order window
-    # (doc_id) and the final per-doc assembly all run on
-    # hashpartitioning(doc_id).
+    # text), boilerplate filter, segment window (doc_id) and the final
+    # per-doc assembly all run on hashpartitioning(doc_id).
     # (An agg+anti-join formulation of the repeated-block drop was tried
     # and rejected: Catalyst pushes the join through the union and
     # re-plans the whole scan+OCR subtree once per branch — 4× the work.)
@@ -189,28 +188,23 @@ def extract(documents: DataFrame, media_pages: DataFrame | None = None,
         " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg",
     )
 
-    # Total order + offset renumbering via a row_number window: the sort
-    # runs in Tungsten's binary UnsafeRow comparator (whole-stage codegen),
-    # which measures faster than an equivalent per-array struct sort with
-    # an interpreted comparator. Same doc_id exchange serves this window,
-    # the two above, and the final assembly aggregation. Anchors number
-    # after every span, so spans keep offsets 0..n-1 however many anchors
-    # a doc_id has; text is the final tiebreak that keeps the order total.
-    spans = keyed.selectExpr(
-        "doc_id", "rank", "text", "media_ref",
-        "row_number() OVER (PARTITION BY doc_id ORDER BY seg, rank,"
-        " y ASC NULLS LAST, x ASC NULLS LAST, text) - 1 AS offset",
-    )
-    # collect_list skips the anchors' null entries: a doc with no span left
-    # gets spans=[] rather than no row, so resume_filter does not
-    # re-process it forever and the golden pass-rate join keeps it in the
-    # denominator.
-    return spans.groupBy("doc_id").agg(F.expr(
+    # Total order + offset numbering inside the per-doc aggregation: sort
+    # each doc's span structs by (seg, rank, y, x, text) and number them
+    # by array position. Struct fields sort nulls first, which is what seg
+    # needs (text before the first marker leads); y and x sort nulls last
+    # (a span without the "x,y|" prefix follows the positioned ones), so a
+    # null flag goes ahead of each. text is the final tiebreak that keeps
+    # the order total. collect_list skips the anchors' null entries: a doc
+    # with no span left gets spans=[] rather than no row, so resume_filter
+    # does not re-process it forever and the golden pass-rate join keeps it
+    # in the denominator.
+    return keyed.groupBy("doc_id").agg(F.expr(
         f"transform(array_sort(collect_list(CASE WHEN rank != {ANCHOR} THEN"
-        " named_struct('o', offset, 's', named_struct("
-        "'kind', CASE WHEN rank = 0 THEN 'media' ELSE 'text' END,"
-        " 'text', text, 'media_ref', media_ref, 'offset', offset)) END)),"
-        " e -> e.s) AS spans"))
+        " named_struct('seg', seg, 'rank', rank, 'yn', y IS NULL, 'y', y,"
+        " 'xn', x IS NULL, 'x', x, 'text', text, 'media_ref', media_ref)"
+        " END)), (e, i) -> named_struct("
+        "'kind', CASE WHEN e.rank = 0 THEN 'media' ELSE 'text' END,"
+        " 'text', e.text, 'media_ref', e.media_ref, 'offset', i)) AS spans"))
 
 
 def resume_filter(documents: DataFrame, committed: DataFrame) -> DataFrame:

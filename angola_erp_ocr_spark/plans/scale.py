@@ -49,10 +49,6 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int,
     w.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
                   key: str, how: str = "inner") -> DataFrame:
     """Join two same-bucketed tables on their bucket key — plans as a

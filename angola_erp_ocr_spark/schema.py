@@ -68,39 +68,6 @@ MEDIA_PAGE = T.StructType(
     ]
 )
 
-# Extracted header-field record (D7): one wide nullable struct +
-# doc_class discriminator (SURVEY §7.5 "union-shaped outputs").
-FIELDS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("doc_class", T.StringType(), True),
-        T.StructField("supplier", T.StringType(), True),
-        T.StructField("supplier_nif", T.StringType(), True),
-        T.StructField("invoice_number", T.StringType(), True),
-        T.StructField("invoice_date", T.StringType(), True),
-        T.StructField("currency", T.StringType(), True),
-        T.StructField("country", T.StringType(), True),
-        T.StructField("iban", T.StringType(), True),
-        T.StructField("total_amount", T.StringType(), True),
-        T.StructField(
-            "items",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("item_id", T.StringType(), True),
-                        T.StructField("description", T.StringType(), True),
-                        T.StructField("quantity", T.StringType(), True),
-                        T.StructField("rate", T.StringType(), True),
-                        T.StructField("total", T.StringType(), True),
-                        T.StructField("iva", T.StringType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
-    ]
-)
-
 LINEAGE = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -111,22 +78,6 @@ LINEAGE = T.StructType(
         T.StructField("wall_ms", T.LongType(), False),
     ]
 )
-
-# ---------------------------------------------------------------------------
-# Doc-class registry (reference L14 dispatch, api/util.py:903..2165)
-# ---------------------------------------------------------------------------
-
-DOC_CLASSES = [
-    "en_invoice",
-    "ao_modelo_factura",
-    "mcx_express",
-    "baidirecto",
-    "pagamento_dc",
-    "modelo6_iva",
-    "zap_fibra",
-    "rupe",
-    "noise",
-]
 
 # keyword → class routing, mirroring the reference's `"X" in line` cascade
 # (api/util.py:903, 1015, 1152-1154, 1893, 2128-2165). Order = precedence.
@@ -157,9 +108,6 @@ STOP_MARKERS = [
     "PROCESSADO POR PROGRAMA VALIDADO", "OBS:", "AMOUNT IN WORDS",
     "CÓD./MOTIVO INCIDÊNCIA",
 ]
-
-# «avoid» line patterns (P9, api/util.py:172-179, 9395-9400).
-AVOID_PATTERNS = r"(ORIGINAL|2!VIA|2ªVIA|2º ?VIA|DUPLICADO|TELEF\.|[\w.+-]+@[\w-]+\.[\w.]+)"
 
 # bbox field templates (L12, util/pdf_scrape.py:165-328): tiny broadcast dim.
 # (doc_class, field, x0, y0, x1, y1) in page points.

@@ -3,8 +3,7 @@
 The reference resolves ERP-relative file paths per request and re-reads
 every file from disk (S1, ocr_read.py:107-121 + 8 duplicated copies in
 api/util.py). Here paths are a pure column expression and bytes arrive
-either as a lake table scan or a `binaryFile` directory read — no per-row
-I/O anywhere.
+as a lake table scan — no per-row I/O anywhere.
 
 Writes target Iceberg when the runtime jars are present (`writeTo`), else
 a parquet directory with the same append/overwrite semantics — the
@@ -36,28 +35,6 @@ def resolve_path(col, base: str = "/srv/erp"):
         )
         .when(col.startswith("/"), col)
         .otherwise(F.concat(F.lit(base + "/files/"), col))
-    )
-
-
-def read_documents(spark: SparkSession, source: str) -> DataFrame:
-    """Scan the documents table: an Iceberg/catalog table name or a
-    parquet path. Predicate pushdown / partition pruning apply either way.
-    """
-    if os.path.sep in source or source.endswith(".parquet"):
-        return spark.read.parquet(source)
-    return spark.read.table(source)
-
-
-def read_binary_media(spark: SparkSession, path: str,
-                      glob: str = "*") -> DataFrame:
-    """S2-adjacent ingest: raw page images / PDFs as binary rows
-    (path, modificationTime, length, content) via Spark's binaryFile
-    source — the bulk-load path that turns a file dump into the
-    media_pages table."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
     )
 
 

@@ -162,7 +162,7 @@ def test_k4_annotate_pages_roundtrip(spark):
     """K4 (util/ocr_pdf.py:575-599): low-conf word boxes become highlight
     rects, zero-conf boxes redact rects, appended as an AN01 container
     that coexists with the QR container and leaves the word grid (and QR
-    decode) byte-identical."""
+    decode) byte-identical; a page with no low-conf word is unchanged."""
     from angola_erp_ocr_spark.glyph import decode_page_columns, encode_page
     from angola_erp_ocr_spark.operators import multimodal
 
@@ -177,9 +177,22 @@ def test_k4_annotate_pages_roundtrip(spark):
              word_idx=3, text=""),  # sentinel row: never annotated
     ]
     blob = multimodal.embed_qr(encode_page(words), "https://agt.example/q")
-    pages = spark.createDataFrame([("page://a/0", bytearray(blob))],
-                                  "media_ref string, glyph_grid binary")
-    out = multimodal.annotate_pages(pages).collect()[0]
+    # one Arrow batch: a page with no rect between two annotated pages
+    clean = encode_page([{**words[0], "conf": 90}])
+    low = encode_page([{**words[1], "x": 7, "conf": 10}])
+    pages = spark.createDataFrame(
+        [("page://a/0", 0, bytearray(blob)),
+         ("page://a/1", 1, bytearray(clean)),
+         ("page://a/2", 2, bytearray(low))],
+        "media_ref string, page_no int, glyph_grid binary").coalesce(1)
+    rows = multimodal.annotate_pages(pages).collect()
+    out, out_clean, out_low = sorted(rows, key=lambda r: r["media_ref"])
+    assert out_clean["n_annotations"] == 0
+    assert bytes(out_clean["annotated"]) == clean
+    assert out_low["n_annotations"] == 1
+    assert multimodal.walk_page_extras(bytes(out_low["annotated"]))[
+        "annotations"] == [dict(x=7, y=20, w=30, h=12,
+                                kind=multimodal.ANNOT_HIGHLIGHT)]
     assert out["n_annotations"] == 2
     ann_blob = bytes(out["annotated"])
     extras = multimodal.walk_page_extras(ann_blob)
@@ -531,15 +544,22 @@ def test_ladder_lang_rung_recovers_what_por_cannot(spark, tmp_path):
     assert not got_por["must_ok"]
 
 
-@pytest.mark.parametrize("bad", ["truncated_gg02", "gg01"])
-def test_ocr_lines_error_names_the_bad_page(spark, bad):
-    """ocr_lines has one decode path: a malformed page (a truncated GG02
-    blob) or a retired GG01 blob fails the batch, and the error names the
-    offending page's media_ref and page_no."""
+@pytest.mark.parametrize("op,bad", [
+    pytest.param(op, bad, id=bad if op == "ocr_lines" else f"{op}-{bad}")
+    for op in ("ocr_lines", "ocr_words", "annotate_pages")
+    for bad in ("truncated_gg02", "gg01")])
+def test_ocr_lines_error_names_the_bad_page(spark, op, bad):
+    """Every glyph stage (ocr_lines, ocr_words, annotate_pages) has one
+    decode path: a malformed page (a truncated GG02 blob) or a retired
+    GG01 blob fails the batch, and the error names the offending page's
+    media_ref and page_no."""
     import struct
 
-    from angola_erp_ocr_spark.operators.ocr import ocr_lines
+    from angola_erp_ocr_spark.operators import multimodal, ocr
     from angola_erp_ocr_spark.schema import MEDIA_PAGE
+
+    stage = {"ocr_lines": ocr.ocr_lines, "ocr_words": ocr.ocr_words,
+             "annotate_pages": multimodal.annotate_pages}[op]
 
     words = [dict(x=0, y=0, w=8, h=12, conf=80, block=0, par=0, line=0,
                   word_idx=0, text="CLEAN")]
@@ -556,7 +576,7 @@ def test_ocr_lines_error_names_the_bad_page(spark, bad):
             ("page://ok/1", 0, bytearray(good), 150)]
     pages = spark.createDataFrame(rows, MEDIA_PAGE).coalesce(1)
     with pytest.raises(Exception) as ei:
-        ocr_lines(pages).collect()
+        stage(pages).collect()
     msg = str(ei.value)
     assert "media_ref='page://bad/0' page_no=3" in msg
     assert "batch page 1:" in msg
