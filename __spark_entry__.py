@@ -45,7 +45,6 @@ from angola_erp_ocr_spark.operators.dedup import (
     exact_duplicates,
     jaccard_pairs,
     minhash_lsh_pairs,
-    minhash_signature,
     simhash32,
 )
 from angola_erp_ocr_spark.operators.fields import (

@@ -1,9 +1,10 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Exact (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket join),
-SimHash, n-gram Jaccard, and embedding-cosine near-dup. All pure DataFrame
-expressions (no UDFs) so the whole stage is codegen'd and the shuffles are
-the only cost.
+SimHash, n-gram Jaccard, embedding-cosine near-dup, and near-dup groups
+(connected components by large-star/small-star, then a min-id keeper). All
+pure DataFrame expressions (no UDFs) so the whole stage is codegen'd and the
+shuffles are the only cost.
 
 Cross-engine determinism: token/shingle hashes are 60-bit ints derived from
 md5 hex (identical in Spark and DuckDB), so the DuckDB oracles replicate the
@@ -16,6 +17,8 @@ Scale notes:
     skew risk (a boilerplate shingle set shared by millions of docs) — cap
     bucket size with a count filter before the self-join (`max_bucket`).
   * pairwise verification joins happen only inside buckets, never globally.
+  * connected components: O(log n) star rounds, ~2 shuffles each, even on
+    long near-dup chains.
 """
 
 from __future__ import annotations
@@ -78,9 +81,23 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
 # MinHash signatures + LSH banding
 # ---------------------------------------------------------------------------
 
+def _minhash(hashes: Column, perms: Column) -> Column:
+    """One MinHash value per permutation index i in ``perms``:
+    min over shingles of ((2i+1)h + 3i+7) % p."""
+    return F.transform(
+        perms,
+        lambda i: F.array_min(
+            F.transform(
+                hashes,
+                lambda h: ((2 * i + 1) * h + (3 * i + 7)) % MERSENNE31,
+            )
+        ),
+    )
+
+
 def minhash_from_hashes(hashes: Column, k: int = 16) -> Column:
-    """k-permutation MinHash over a hash-array column:
-    sig[i] = min over shingles of ((2i+1)h + 3i+7) % p.
+    """k-permutation MinHash over a hash-array column (``_minhash`` over
+    permutations 0..k-1).
 
     CAUTION: aliasing the shingle hashes into a column first
     (`.withColumn("_h", shingle_hashes(...))`) does NOT stop the k-fold
@@ -92,21 +109,7 @@ def minhash_from_hashes(hashes: Column, k: int = 16) -> Column:
     the hashes once. For one-shot signatures at modest k the inline
     recompute is acceptable; for the banded hot path use
     ``minhash_lsh_pairs``'s explode-first shape."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                hashes,
-                lambda h: ((2 * i + 1) * h + (3 * i + 7)) % MERSENNE31,
-            )
-        ),
-    )
-
-
-def minhash_signature(col: Column, k: int = 16, n: int = 3) -> Column:
-    """Single-expression form (convenience; see minhash_from_hashes for
-    the two-step form used in the hot paths)."""
-    return minhash_from_hashes(shingle_hashes(col, n), k)
+    return _minhash(hashes, F.sequence(F.lit(0), F.lit(k - 1)))
 
 
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -130,15 +133,9 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
         shingle_hashes(F.col(text_col), n).alias("_h"),
         F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
     )
-    band_sig = F.transform(
-        F.sequence(F.col("band") * rows, F.col("band") * rows + rows - 1),
-        lambda i: F.array_min(
-            F.transform(
-                F.col("_h"),
-                lambda h: ((2 * i + 1) * h + (3 * i + 7)) % MERSENNE31,
-            )
-        ),
-    )
+    band_sig = _minhash(
+        F.col("_h"),
+        F.sequence(F.col("band") * rows, F.col("band") * rows + rows - 1))
     buckets = exploded.select(
         "id", "band", F.md5(F.array_join(band_sig, ",")).alias("key")
     )
@@ -169,6 +166,12 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
 # n-gram Jaccard (exact pairwise within candidate set or blocked)
 # ---------------------------------------------------------------------------
 
+def _jaccard(a: Column, b: Column) -> Column:
+    """Jaccard of two shingle sets, rounded to 6 decimals (the oracle key)."""
+    return F.round(
+        F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)), 6)
+
+
 def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3,
                   threshold: float = 0.5) -> DataFrame:
@@ -182,13 +185,10 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                     shingles(F.col(text_col), n).alias("sh"))
     a = s.alias("a")
     b = s.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-    jac = (inter / union).alias("jaccard")
     return (
         a.join(b, F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.round(jac, 6).alias("jaccard"))
+                _jaccard(F.col("a.sh"), F.col("b.sh")).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -304,102 +304,20 @@ def verify_candidates(docs: DataFrame, pairs: DataFrame,
         .join(s.select(F.col("id").alias("id_b"),
                        F.col("sh").alias("sh_b")), "id_b")
     )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
     return (
-        j.select("id_a", "id_b", F.round(inter / union, 6).alias("jaccard"))
+        j.select("id_a", "id_b",
+                 _jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
 
-def connected_components(pairs: DataFrame, max_iters: int = 20,
-                         algorithm: str = "propagate") -> DataFrame:
+def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """(id, component) for every node in the pair graph; component = the
-    minimum id reachable from the node. After the call,
-    ``connected_components.last_rounds`` holds the rounds used.
+    minimum id reachable from the node.
 
-    ``algorithm="propagate"`` (default): iterative min-label propagation
-    with an early-exit convergence check; ``localCheckpoint`` truncates
-    the lineage each round so the plan doesn't grow exponentially.
-    Rounds needed = graph diameter — the right cost model for near-dup
-    components, which are shallow dup clusters, at one shuffle join + one
-    aggregation per round.
-
-    ``algorithm="star"``: large-star/small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — converges
-    in O(log n) rounds even on high-diameter graphs (a 2^10-node chain
-    needs ~10 star rounds vs ~1024 propagation rounds; property-pinned in
-    tests/test_properties.py). Use for pair graphs that may contain long
-    chains (e.g. transitive fuzzy matches), at ~2 shuffle rounds per
-    iteration."""
-    if algorithm == "star":
-        labels, rounds, converged = _cc_large_small_star(pairs, max_iters)
-        if not converged:
-            # Record the failure before raising — otherwise last_converged
-            # keeps the stale value from the previous call (ADVICE r4).
-            connected_components.last_rounds = rounds
-            connected_components.last_converged = False
-            # The star labeling is only valid AT the star-forest fixpoint;
-            # short of it a node can carry two contradictory labels that
-            # flow silently into neardup_groups (ADVICE r4). Corrupt
-            # output is strictly worse than failing, so raise — propagate
-            # merely degrades to a possibly-unconverged (but single) label.
-            raise RuntimeError(
-                f"connected_components(star) did not reach the star-forest "
-                f"fixpoint in max_iters={max_iters} rounds; labels would "
-                f"be unsound — raise max_iters (O(log n) rounds suffice)")
-    elif algorithm == "propagate":
-        labels, rounds, converged = _cc_propagate(pairs, max_iters)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    connected_components.last_rounds = rounds
-    connected_components.last_converged = converged
-    return labels
-
-
-def _cc_propagate(
-        pairs: DataFrame, max_iters: int) -> tuple[DataFrame, int, bool]:
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-    )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "comp", F.col("id"))
-    labels = labels.localCheckpoint(eager=True)
-    edges = edges.localCheckpoint(eager=True)
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        # neighbour minimum, then min with own label
-        nbr = (
-            edges.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        updated = (
-            labels.join(nbr, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("comp"),
-                        F.coalesce(F.col("nbr_comp"), F.col("comp")))
-                .alias("comp"),
-                (F.coalesce(F.col("nbr_comp"), F.col("comp"))
-                 < F.col("comp")).alias("_changed"),
-            )
-        ).localCheckpoint(eager=True)
-        n_changed = updated.where(F.col("_changed")).count()
-        labels = updated.drop("_changed")
-        if n_changed == 0:
-            return labels, rounds, True
-    return labels, rounds, False
-
-
-def _cc_large_small_star(pairs: DataFrame,
-                         max_iters: int) -> tuple[DataFrame, int, bool]:
-    """Alternating large-star / small-star rounds to a star-forest
-    fixpoint. Edges kept canonical as (lo < hi).
+    Large-star/small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC'14), alternated to a star-forest fixpoint
+    with edges kept canonical as (lo < hi):
 
     * large-star: for each node u, every strictly-larger neighbour v
       re-attaches to m = min(N(u) ∪ {u}).
@@ -407,9 +325,17 @@ def _cc_large_small_star(pairs: DataFrame,
       (and u itself) attaches to the minimum neighbour.
 
     Both emit ≤ |E| edges, preserve connectivity, and strictly shrink the
-    potential function — standard proofs in the paper. Fixpoint detected
-    by an order-insensitive edge-set signature (count + hash sum), one
-    tiny aggregate per round."""
+    potential function — standard proofs in the paper. Rounds are
+    O(log n) even on high-diameter graphs (a 2^10-node chain takes ≤ 24;
+    property-pinned in tests/test_properties.py), at ~2 shuffle rounds
+    each; ``localCheckpoint`` truncates the lineage every round. The
+    fixpoint is detected by an order-insensitive edge-set signature
+    (count + hash xor), one tiny aggregate per round. After the call,
+    ``connected_components.last_rounds`` holds the rounds used.
+
+    The labels are sound only AT the fixpoint: short of it a node can
+    carry two contradictory labels, so running out of ``max_iters``
+    raises rather than returning split components."""
     edges = (
         pairs.select(F.least("id_a", "id_b").alias("lo"),
                      F.greatest("id_a", "id_b").alias("hi"))
@@ -428,10 +354,8 @@ def _cc_large_small_star(pairs: DataFrame,
         return row["n"], row["h"]
 
     sig = signature(edges)
-    rounds = 0
-    converged = False
-    for _ in range(max_iters):
-        rounds += 1
+    for rounds in range(1, max_iters + 1):
+        connected_components.last_rounds = rounds
         # ---- large-star ----
         bi = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")) \
             .unionByName(
@@ -447,7 +371,7 @@ def _cc_large_small_star(pairs: DataFrame,
         )
         # ---- small-star ---- (edges oriented hi → {lo...}; m ≤ every lo)
         mins2 = large.groupBy("hi").agg(F.min("lo").alias("m"))
-        small = (
+        edges = (
             large.join(mins2, "hi")
             .where(F.col("lo") != F.col("m"))
             .select(F.col("m").alias("lo"), F.col("lo").alias("hi"))
@@ -456,35 +380,28 @@ def _cc_large_small_star(pairs: DataFrame,
             .distinct()
             .localCheckpoint(eager=True)
         )
-        edges = small
         new_sig = signature(edges)
         if new_sig == sig:
-            converged = True
             break
         sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not reach the star-forest fixpoint "
+            f"in max_iters={max_iters} rounds; labels would be unsound — "
+            f"raise max_iters (O(log n) rounds suffice)")
     # fixpoint: every edge is (root, member)
-    labels = (
+    return (
         edges.select(F.col("hi").alias("id"), F.col("lo").alias("comp"))
         .unionByName(
             edges.select(F.col("lo").alias("id"), F.col("lo").alias("comp")))
         .distinct()
     )
-    return labels, rounds, converged
 
 
-def neardup_groups(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", k: int = 16, n: int = 3,
-                   bands: int = 4, rows: int = 4, max_bucket: int = 1000,
-                   threshold: float = 0.5, max_iters: int = 20,
-                   algorithm: str = "propagate") -> DataFrame:
-    """The full near-dup dedup: (component_id, keeper, members, n_members),
-    one row per group of ≥ 2 verified near-duplicates. keeper = min id
-    (same election as ``exact_duplicates``); members is the sorted
-    comma-joined id list (driver-hashable)."""
-    cand = minhash_lsh_pairs(docs, id_col, text_col, k, n, bands, rows,
-                             max_bucket)
-    verified = verify_candidates(docs, cand, id_col, text_col, n, threshold)
-    comp = connected_components(verified, max_iters, algorithm)
+def _groups(comp: DataFrame) -> DataFrame:
+    """(component_id, keeper, members, n_members), one row per component:
+    keeper = min id (same election as ``exact_duplicates``); members is
+    the sorted comma-joined id list (driver-hashable)."""
     return (
         comp.groupBy(F.col("comp").alias("component_id"))
         .agg(
@@ -497,6 +414,18 @@ def neardup_groups(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+def neardup_groups(docs: DataFrame, id_col: str = "doc_id",
+                   text_col: str = "text", k: int = 16, n: int = 3,
+                   bands: int = 4, rows: int = 4, max_bucket: int = 1000,
+                   threshold: float = 0.5) -> DataFrame:
+    """The full near-dup dedup: (component_id, keeper, members, n_members),
+    one row per group of ≥ 2 verified near-duplicates; keeper = min id."""
+    cand = minhash_lsh_pairs(docs, id_col, text_col, k, n, bands, rows,
+                             max_bucket)
+    verified = verify_candidates(docs, cand, id_col, text_col, n, threshold)
+    return _groups(connected_components(verified))
+
+
 # ---------------------------------------------------------------------------
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
@@ -504,22 +433,16 @@ def neardup_groups(docs: DataFrame, id_col: str = "doc_id",
 def embedding_near_dups(emb: DataFrame, id_col: str = "vec_id",
                         vec_col: str = "embedding",
                         threshold: float = 0.95,
-                        block_col: str | None = None,
                         n_planes: int = 16, band_bits: int = 4,
                         dims: int = 64) -> DataFrame:
     """Pairs with cosine similarity ≥ threshold.
 
     Blocking — the move that keeps this an equi-join instead of a
-    broadcast-nested-loop cross join at 10^9+ vectors:
-
-      * ``block_col`` given → equi-join on that column (a precomputed IVF
-        cell, a shard key, …; exact within blocks).
-      * default (None) → banded random-hyperplane LSH: each vector's
-        ``n_planes``-bit signature (deterministic md5-derived planes,
-        see ``similarity.hyperplane_signature``) splits into
-        n_planes/band_bits bands; candidates share ≥ 1 full band value.
-        Approximate by design; the exact-within-blocks guarantee of the
-        old label blocking required a label real corpora don't have.
+    broadcast-nested-loop cross join at 10^9+ vectors — is banded
+    random-hyperplane LSH: each vector's ``n_planes``-bit signature
+    (deterministic md5-derived planes, see
+    ``similarity.hyperplane_signature``) splits into n_planes/band_bits
+    bands; candidates share ≥ 1 full band value. Approximate by design.
 
     Sizing the bands — the knob that decides whether this survives 10^9+
     vectors. Per-band match probability at cosine c is
@@ -538,47 +461,36 @@ def embedding_near_dups(emb: DataFrame, id_col: str = "vec_id",
       * looser thresholds (cos 0.9-0.95) make ANY within-block pairing
         explode combinatorially; there the right scale path is IVF-cell
         blocking (SemDeDup-style: k-means cells of ~10^3 vectors,
-        pairwise verify within cells) — ``similarity.ivf_assign`` is the
-        building block, with n_cells ≈ N/10^3.
+        pairwise verify within cells) — ``semdedup_pairs``, with
+        n_cells ≈ N/10^3.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    if block_col:
-        s = emb.select(F.col(id_col).alias("id"), v.alias("v"),
-                       F.col(block_col).alias("blk"))
-        exploded = s.withColumn("band", F.lit(0))  # single pseudo-band
-        join_keys = ["blk"]
-    else:
-        from .similarity import hyperplane_signature
+    from .similarity import cosine, hyperplane_signature
 
-        n_bands = n_planes // band_bits
-        s = emb.select(F.col(id_col).alias("id"), v.alias("v")).withColumn(
-            "sig", hyperplane_signature(F.col("v"), n_planes, dims))
-        # the explode's Generate is a projection barrier: sig (n_planes
-        # dot products) is computed once per row, not once per band
-        exploded = s.select(
-            "id", "v", "sig",
-            F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-        ).withColumn(
-            "blk",
-            F.floor(F.col("sig") / F.pow(F.lit(2.0), F.col("band") * band_bits))
-            .cast("bigint") % (1 << band_bits),
-        ).drop("sig")
-        join_keys = ["band", "blk"]
+    n_bands = n_planes // band_bits
+    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    s = emb.select(F.col(id_col).alias("id"), v.alias("v")).withColumn(
+        "sig", hyperplane_signature(F.col("v"), n_planes, dims))
+    # the explode's Generate is a projection barrier: sig (n_planes
+    # dot products) is computed once per row, not once per band
+    exploded = s.select(
+        "id", "v", "sig",
+        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
+    ).withColumn(
+        "blk",
+        F.floor(F.col("sig") / F.pow(F.lit(2.0), F.col("band") * band_bits))
+        .cast("bigint") % (1 << band_bits),
+    ).drop("sig")
     # column-renamed selves (see simhash_near_dups: `.alias` self-joins
     # intermittently fail attribute binding on post-join expressions)
     left = exploded.select(
-        F.col("id").alias("id_a"), F.col("v").alias("v_a"), *join_keys)
+        F.col("id").alias("id_a"), F.col("v").alias("v_a"), "band", "blk")
     right = exploded.select(
-        F.col("id").alias("id_b"), F.col("v").alias("v_b"), *join_keys)
-    dot = F.aggregate(
-        F.zip_with(F.col("v_a"), F.col("v_b"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.col("v_a"), F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(F.col("v_b"), F.lit(0.0), lambda acc, x: acc + x * x))
+        F.col("id").alias("id_b"), F.col("v").alias("v_b"), "band", "blk")
     return (
-        left.join(right, join_keys)
+        left.join(right, ["band", "blk"])
         .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(dot / (na * nb), 6).alias("cosine"))
+        .select("id_a", "id_b",
+                cosine(F.col("v_a"), F.col("v_b")).alias("cosine"))
         .where(F.col("cosine") >= threshold)
         .groupBy("id_a", "id_b")           # a pair can match in >1 band
         .agg(F.min("cosine").alias("cosine"))
@@ -607,7 +519,7 @@ def semdedup_pairs(emb: DataFrame, n_cells: int = 8,
     cell group, an equi-join + within-partition compare, never a global
     cross join. Missed pairs are exactly the cross-cell ones (recall is
     pinned against brute force in tests/test_dataops.py)."""
-    from .similarity import dot, ivf_assign, ivf_centroids, norm
+    from .similarity import cosine, ivf_assign, ivf_centroids
 
     cent = ivf_centroids(emb, n_cells, id_col, vec_col)
     assigned = ivf_assign(emb, cent, id_col, vec_col)  # (id, v, cell)
@@ -618,33 +530,19 @@ def semdedup_pairs(emb: DataFrame, n_cells: int = 8,
     return (
         a.join(b, "cell")
         .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.round(dot(F.col("va"), F.col("vb"))
-                    / (norm(F.col("va")) * norm(F.col("vb"))), 6)
-            .alias("cosine"))
+        .select("id_a", "id_b",
+                cosine(F.col("va"), F.col("vb")).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 
 
 def semdedup_groups(emb: DataFrame, n_cells: int = 8,
-                    threshold: float = 0.9, max_iters: int = 20,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    algorithm: str = "propagate") -> DataFrame:
+                    threshold: float = 0.9, id_col: str = "vec_id",
+                    vec_col: str = "embedding") -> DataFrame:
     """(component_id, keeper, members, n_members) over the semantic-dup
     graph — same group/keeper election as ``neardup_groups`` (keeper =
     min id; the paper's keep-farthest-from-centroid is a drop-in
     alternative election, min id keeps the oracle shared with the text
     dedup family)."""
     pairs = semdedup_pairs(emb, n_cells, threshold, id_col, vec_col)
-    comp = connected_components(pairs, max_iters, algorithm)
-    return (
-        comp.groupBy(F.col("comp").alias("component_id"))
-        .agg(
-            F.min("id").alias("keeper"),
-            F.array_join(
-                F.transform(F.sort_array(F.collect_list("id")),
-                            lambda x: x.cast("string")), ",").alias("members"),
-            F.count("*").cast("long").alias("n_members"),
-        )
-    )
+    return _groups(connected_components(pairs))

@@ -132,9 +132,9 @@ def strip_dom_boilerplate(spans: DataFrame,
     matching the reference's avoid list (AVOID_RE — page numbers,
     'Processado por programa validado', 2ª-via stamps, emails;
     api/util.py:172-179). Case-insensitive like the reference's
-    ``.upper()`` comparisons. Pure filter: no shuffle; composes with
-    ``layout.strip_boilerplate`` (per-doc repeats) and
-    ``layout.corpus_boilerplate`` (cross-doc) for the full
-    boilerplate-strip ladder."""
+    ``.upper()`` comparisons. Pure filter: no shuffle; the per-doc
+    repeated-block drop is ``pipeline.extract()``'s (AVOID flag plus the
+    (doc_id, text) repeat count), and ``layout.corpus_boilerplate`` the
+    cross-doc one."""
     t = F.col(text_col)
     return spans.where((t != "") & (~F.upper(t).rlike(AVOID_RE)))

@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.normalize import AVOID_RE
 from ..schema import HEADER_WORDS_EN, HEADER_WORDS_PT, STOP_MARKERS
 
 
@@ -168,23 +167,9 @@ def mark_items_region(lines: DataFrame, scope: list[str],
 
 
 # ---------------------------------------------------------------------------
-# Boilerplate suppression (P9 + repeated-block, north-rule generalization of
-# the reference's fixed stop-word lists api/util.py:172-179, 9395-9400):
-# drop lines matching AVOID_RE or whose text recurs ≥ k times within a doc.
+# Cross-doc boilerplate (the per-doc AVOID_RE + repeated-block drop runs
+# inside plans.pipeline.extract)
 # ---------------------------------------------------------------------------
-
-def strip_boilerplate(lines: DataFrame, scope: list[str], text_col: str = "text",
-                      repeat_k: int = 3) -> DataFrame:
-    w = Window.partitionBy(*scope, text_col)
-    return (
-        lines.withColumn("_rep", F.count(F.lit(1)).over(w))
-        .where(
-            (~F.upper(F.col(text_col)).rlike(AVOID_RE))
-            & (F.col("_rep") < repeat_k)
-        )
-        .drop("_rep")
-    )
-
 
 def corpus_boilerplate(lines: DataFrame, doc_col: str = "doc_id",
                        text_col: str = "text",

@@ -32,6 +32,26 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine similarity rounded to 6 decimals: the cross-engine key every
+    cosine operator filters and ranks on (the DuckDB oracles round the
+    same way)."""
+    return F.round(dot(a, b) / (norm(a) * norm(b)), 6)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, nbr_id, cosine): the k best neighbours per query,
+    ranked on the rounded cosine with an nbr_id tiebreak (cross-engine
+    deterministic)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("nbr_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "nbr_id", "cosine")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 5,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -48,19 +68,10 @@ def cosine_topk(
                        _as_double(F.col(vec_col)).alias("qv"))
     scored = (
         c.join(F.broadcast(q), F.col("nbr_id") != F.col("query_id"))
-        .select(
-            "query_id", "nbr_id",
-            F.round(dot(F.col("cv"), F.col("qv"))
-                    / (norm(F.col("cv")) * norm(F.col("qv"))), 6).alias("cosine"),
-        )
+        .select("query_id", "nbr_id",
+                cosine(F.col("cv"), F.col("qv")).alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nbr_id", "cosine")
-    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -119,20 +130,11 @@ def ann_topk_lsh(
     scored = (
         c.join(qx, "bucket")
         .where(F.col("nbr_id") != F.col("query_id"))
-        .select(
-            "query_id", "nbr_id",
-            F.round(dot(F.col("cv"), F.col("qv"))
-                    / (norm(F.col("cv")) * norm(F.col("qv"))), 6).alias("cosine"),
-        )
+        .select("query_id", "nbr_id",
+                cosine(F.col("cv"), F.col("qv")).alias("cosine"))
         .dropDuplicates(["query_id", "nbr_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nbr_id", "cosine")
-    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -210,16 +212,7 @@ def ivf_topk(
     scored = (
         assigned.join(qcells, "cell")
         .where(F.col("id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("id").alias("nbr_id"),
-            F.round(dot(F.col("v"), F.col("qv"))
-                    / (norm(F.col("v")) * norm(F.col("qv"))), 6).alias("cosine"),
-        )
+        .select("query_id", F.col("id").alias("nbr_id"),
+                cosine(F.col("v"), F.col("qv")).alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nbr_id", "cosine")
-    )
+    return _top_k(scored, k)

@@ -286,6 +286,18 @@ def test_neardup_groups_transitive_chain(spark):
     assert groups[7]["members"] == "7,8"
 
 
+def test_neardup_groups_deep_chain_is_one_group(spark):
+    """A 64-doc chain (doc i holds tokens w{i}..w{i+7}, so only neighbours
+    are near-dups) is ONE group: the components must reach its far end,
+    not stop at a fixed round budget and split it."""
+    rows = [(i, " ".join(f"w{j}" for j in range(i, i + 8)))
+            for i in range(64)]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    got = [(r["keeper"], r["n_members"])
+           for r in dedup.neardup_groups(docs, bands=8, rows=2).collect()]
+    assert got == [(0, 64)]
+
+
 def test_connected_components_converges(spark):
     pairs = spark.createDataFrame(
         [(5, 9), (9, 2), (11, 12), (2, 1)], ["id_a", "id_b"])

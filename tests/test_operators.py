@@ -149,13 +149,20 @@ def test_items_region_detection(spark):
     assert [r["in_items"] for r in got] == [False, False, True, True, False, False]
 
 
-def test_strip_boilerplate_repeats_and_avoid(spark):
-    rows = [("d", "PÁGINA 1"), ("d", "body line a"), ("d", "REPEAT ME"),
-            ("d", "REPEAT ME"), ("d", "REPEAT ME"), ("d", "body line b")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = sorted(r["text"] for r in
-                 layout.strip_boilerplate(df, ["doc_id"]).collect())
-    assert got == ["body line a", "body line b"]
+def test_extract_strips_boilerplate_repeats_and_avoid(spark):
+    """extract() drops AVOID_RE furniture and a line repeated ≥ 3 times
+    in one doc (P9 + repeated-block)."""
+    from angola_erp_ocr_spark.plans.pipeline import extract
+    from angola_erp_ocr_spark.schema import DOCUMENTS_RAW
+
+    lines = ["PÁGINA 1", "body line a", "REPEAT ME", "REPEAT ME",
+             "REPEAT ME", "body line b"]
+    spans = [("text", f"10,{10 * (i + 1)}|{t}", None, i)
+             for i, t in enumerate(lines)]
+    docs = spark.createDataFrame([("d", None, spans)],
+                                 DOCUMENTS_RAW).select("doc_id", "spans")
+    (row,) = extract(docs, None).collect()
+    assert [s["text"] for s in row["spans"]] == ["body line a", "body line b"]
 
 
 def test_k4_annotate_pages_roundtrip(spark):

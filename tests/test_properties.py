@@ -228,13 +228,17 @@ def test_simhash_banding_lossless_property(spark, texts):
     st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(lambda p: p[0] != p[1]),
     min_size=1, max_size=12))
 def test_connected_components_matches_union_find(spark, edges):
-    """Spark min-label propagation == a pure-python union-find reference."""
+    """Spark connected components == a pure-python union-find reference."""
     from angola_erp_ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], ["id_a", "id_b"])
     got = {r["id"]: r["comp"] for r in connected_components(pairs).collect()}
+    assert got == _union_find_labels(edges)
 
+
+def _union_find_labels(edges) -> dict[int, int]:
+    """node → min member of its component, by pure-python union-find."""
     parent: dict[int, int] = {}
 
     def find(x):
@@ -255,14 +259,13 @@ def test_connected_components_matches_union_find(spark, edges):
     members: dict[int, list[int]] = {}
     for n, r in want.items():
         members.setdefault(r, []).append(n)
-    want = {n: min(members[r]) for n, r in want.items()}
-    assert got == want
+    return {n: min(members[r]) for n, r in want.items()}
 
 
 # ---------------------------------------------------------------------------
-# Large-star/small-star connected components (dedup.connected_components
-# algorithm="star", Kiveris et al. SoCC'14): O(log n) rounds on a
-# high-diameter graph, and label-equivalence with min-propagation.
+# Large-star/small-star connected components (dedup.connected_components,
+# Kiveris et al. SoCC'14): O(log n) rounds on a high-diameter graph, a loud
+# failure short of the fixpoint, and union-find labels on random graphs.
 # ---------------------------------------------------------------------------
 
 def test_star_cc_chain_olog_rounds(spark):
@@ -274,7 +277,7 @@ def test_star_cc_chain_olog_rounds(spark):
     n = 1 << 10
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-    labels = connected_components(pairs, max_iters=40, algorithm="star")
+    labels = connected_components(pairs, max_iters=40)
     rounds = connected_components.last_rounds
     got = {r["id"]: r["comp"] for r in labels.collect()}
     assert got == {i: 0 for i in range(n)}
@@ -293,17 +296,11 @@ def test_star_cc_raises_when_fixpoint_not_reached(spark):
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
     with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(pairs, max_iters=1, algorithm="star")
-    # the raise path must record the failure, not leave a stale flag
-    # from a previous successful call (ADVICE r4)
-    assert connected_components.last_converged is False
-    # and the converged flag is exposed on a successful run
-    connected_components(pairs, max_iters=40, algorithm="star")
-    assert connected_components.last_converged is True
+        connected_components(pairs, max_iters=1)
 
 
-def test_star_cc_matches_propagation_on_random_graphs(spark):
-    """star ≡ propagate on seeded random graphs (same (id, comp) map)."""
+def test_star_cc_matches_union_find_on_random_graphs(spark):
+    """star CC ≡ union-find on seeded random graphs (same (id, comp) map)."""
     import random
 
     from angola_erp_ocr_spark.operators.dedup import connected_components
@@ -316,11 +313,9 @@ def test_star_cc_matches_propagation_on_random_graphs(spark):
                               for _ in range(45))}
         pairs = spark.createDataFrame(
             [(a, b) for a, b in sorted(edges)], "id_a long, id_b long")
-        prop = {(r["id"], r["comp"]) for r in connected_components(
-            pairs, max_iters=64, algorithm="propagate").collect()}
-        star = {(r["id"], r["comp"]) for r in connected_components(
-            pairs, max_iters=64, algorithm="star").collect()}
-        assert star == prop
+        star = {r["id"]: r["comp"] for r in connected_components(
+            pairs, max_iters=64).collect()}
+        assert star == _union_find_labels(sorted(edges))
 
 
 # ---------------------------------------------------------------------------
