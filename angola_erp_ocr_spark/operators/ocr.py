@@ -244,9 +244,10 @@ def ocr_lines(media_pages: DataFrame, passthrough: tuple[str, ...] = (),
     (reference deskews the image before Tesseract, util/ocr_pdf.py:129-141;
     with the decoder downstream the observable equivalent is rotated
     boxes). Suspect pages — any assembled line whose words spread >
-    ``SKEW_SPREAD_PX`` vertically — get the projection-profile angle
-    estimate (raster.estimate_skew_points, the same I3 estimator the
-    standalone raster path uses) and their line anchors recomputed from
+    ``SKEW_SPREAD_PX`` vertically — get the pooled within-line slope of
+    their word boxes (raster.estimate_skew_boxes; the standalone raster
+    path's projection-profile search would quantize the angle too coarsely
+    for ~20 boxes per page) and their line anchors recomputed from
     inverse-rotated word coordinates, restoring upright reading order.
     Upright pages never trigger, so the hot path stays one reduceat
     heavier and nothing else.

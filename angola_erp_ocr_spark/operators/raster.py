@@ -112,12 +112,11 @@ def closing(mask: np.ndarray, k: int = 3) -> np.ndarray:
 def estimate_skew_points(ys: np.ndarray, xs: np.ndarray,
                          max_deg: float = 6.0, step: float = 0.25,
                          min_points: int = 16) -> float:
-    """Projection-profile skew estimate over POINT COORDINATES — ink
-    pixels (the raster path) or OCR word-box anchors (the flagship decode
-    path, where the skew of a scanned page surfaces as rotated Tesseract
-    box coordinates rather than as an image we hold). Same estimator
-    either way: text lines collapse into sharp row-profile peaks exactly
-    at the deskew angle."""
+    """Projection-profile skew estimate over POINT COORDINATES, the ink
+    pixels of the raster path (``estimate_skew_deg``): text lines
+    collapse into sharp row-profile peaks exactly at the deskew angle.
+    The flagship decode path deskews word boxes with
+    ``estimate_skew_boxes`` instead."""
     if len(xs) < min_points:
         return 0.0
     ys = ys.astype(np.float64)

@@ -11,10 +11,12 @@ fields appear (SURVEY §4 R1/R2; api/util.py:88-115, util/ocr_pdf.py:
   * R2 is the committed ladder, ``cascade_ladder_committed``: rung 1
     extracts every document, each later rung re-extracts only the
     media-bearing documents still failing the must-field gate, and
-    ``merge_retry_fields`` folds the rungs keep-best. Every rung commits
-    to the lake, so a later rung reads the failed set from the committed
-    passes instead of recomputing earlier ones — the same anti-join
-    discipline as resume (SURVEY §4.4).
+    ``merge_retry_fields`` folds the rungs keep-best once, at the end.
+    Every rung commits one pass row per doc it tried, so a later rung
+    reads its done set from the committed passes with one row filter
+    (tried at this rung or later, or must field found) and one anti-join
+    instead of recomputing earlier rungs — the same anti-join discipline
+    as resume (SURVEY §4.4).
 """
 
 from __future__ import annotations
@@ -59,18 +61,23 @@ RETRY_LADDER: list[dict] = [
 ]
 
 LADDER_FIELD_COLS = ["total_amount", "currency", "invoice_date"]
-LADDER_MUST_FIELDS = ["total_amount"]  # mustNumOperacao analogue
+LADDER_MUST_FIELD = "total_amount"  # mustNumOperacao analogue
 
 
 def _fields_for_pass(extracted: DataFrame, pass_no: int) -> DataFrame:
-    """extraction(doc_id, spans) → one nullable-field row per doc tagged
-    with the rung's pass_no — the per-rung leg of the ladder merge. Runs
-    the REAL L13 field extractor over the rung's extracted text spans."""
+    """extraction(doc_id, spans) → exactly one nullable-field row per doc
+    tagged with the rung's pass_no, the per-rung leg of the ladder merge.
+    Runs the REAL L13 field extractor over the rung's extracted text
+    spans; ``explode_outer`` keeps a doc with no text span (an empty doc,
+    a media span whose page row is missing) as one all-null row, so the
+    rung's tried set is its pass rows."""
     from ..operators.fields import extract_header_fields
 
     lines = extracted.select(
-        "doc_id", F.posexplode("spans").alias("pos", "s")
-    ).where(F.col("s.kind") == "text").select(
+        "doc_id",
+        F.explode_outer(F.filter("spans", lambda s: s["kind"] == "text"))
+        .alias("s"),
+    ).select(
         "doc_id", F.col("s.offset").alias("line_no"),
         F.col("s.text").alias("text"),
     )
@@ -79,7 +86,6 @@ def _fields_for_pass(extracted: DataFrame, pass_no: int) -> DataFrame:
 
 
 def merge_retry_fields(passes: DataFrame, field_cols: list[str],
-                       pass_col: str = "pass_no",
                        must_fields: list[str] | None = None) -> DataFrame:
     """R2 keep-best-so-far field merge (the reference's ``Old*`` vars,
     util/ocr_pdf.py:2388-2402): across retry passes, each field takes its
@@ -96,7 +102,7 @@ def merge_retry_fields(passes: DataFrame, field_cols: list[str],
     """
     aggs = []
     for fc in field_cols:
-        won = F.when(F.col(fc).isNotNull(), F.col(pass_col))
+        won = F.when(F.col(fc).isNotNull(), F.col("pass_no"))
         aggs.append(F.min_by(F.col(fc), won).alias(fc))
         aggs.append(F.min(won).cast("int").alias(f"{fc}_pass"))
     out = passes.groupBy("doc_id").agg(*aggs)
@@ -117,53 +123,39 @@ def cascade_ladder_committed(
 ) -> DataFrame:
     """R2, the retry ladder (util/ocr_pdf.py:1170-1183 sweep + 2388-2402
     keep-best, set-oriented): rung 1 extracts every doc; each later rung
-    extracts ONLY the docs still failing the must-field gate after the
-    merge-so-far — the per-document early exit as an anti-join, no
-    driver-side loop over docs — and only those whose INPUT has a
-    ``kind='media'`` span: rungs vary only OCR settings, so a text-only
-    doc comes out the same at every rung and is terminal after rung 1.
-    Each rung's field rows commit as a snapshot of ``fields_passes``
-    (auditable per rung, resumable: a crash between rungs resumes from
-    the committed passes); the final keep-best merge — with
-    ``<field>_pass`` provenance columns — commits to ``fields_ladder``,
-    so the committed table records which rung won every field. A doc is
-    DONE for rung p iff it is already recovered (must_ok) OR it already
-    has a committed row at pass_no ≥ p — the second leg makes
-    unrecoverable docs terminal once every rung has tried them (without
-    it, a corpus with any hopeless doc re-extracts it at all rungs on
-    every re-run and the snapshot tables grow without bound). A
-    completed ladder re-run is therefore a metadata-only no-op (per-rung
-    isEmpty checks, ≤ len(ladder) bounded driver actions, and the final
-    ``fields_ladder`` append is skipped); a crash between rungs resumes
-    exactly at the first rung whose pass rows are missing. Duplicate
-    (doc, pass_no) rows cannot be appended under this rule, and would in
-    any case merge to identical values (same configuration ⇒ same
-    extraction)."""
-    from .snapshot import committed_snapshots, read_snapshots, snapshot_append
+    extracts ONLY the docs still failing the must-field gate (the
+    per-document early exit as an anti-join, no driver-side loop over
+    docs) and only those whose INPUT has a ``kind='media'`` span: rungs
+    vary only OCR settings, so a text-only doc is terminal after rung 1.
 
-    def merged(passes: DataFrame) -> DataFrame:
-        return merge_retry_fields(passes, LADDER_FIELD_COLS,
-                                  must_fields=LADDER_MUST_FIELDS)
+    Every doc a rung extracts gets exactly one row, all-null without a
+    text span, in that rung's ``fields_passes`` snapshot. A doc is DONE
+    for rung p iff one of its committed pass rows has ``pass_no ≥ p``
+    (tried there already, so an unrecoverable doc is terminal once every
+    rung has tried it) or a non-null must field (recovered). With ONE
+    must field that is a row filter over the committed passes, so each
+    rung costs one filter and one anti-join, with no merge in the loop. A
+    crash between rungs resumes at the first rung whose pass rows are
+    missing; a completed ladder re-run extracts nothing, runs ≤
+    len(ladder) ``isEmpty`` checks and skips the ``fields_ladder``
+    append. The one keep-best merge, with ``<field>_pass`` provenance,
+    runs over all committed passes, keeps one row per distinct doc_id of
+    ``documents`` (as ``extract`` does) and commits to ``fields_ladder``,
+    so the committed table records which rung won every field."""
+    from .snapshot import committed_snapshots, read_snapshots, snapshot_append
 
     passes_table = f"{out_dir}/fields_passes"
     retryable = documents.where(
         F.exists("spans", lambda s: s["kind"] == "media"))
-    todo = documents
     appended_any = False
     for rung in ladder:
-        # On a resume (any committed passes exist) the done-docs
-        # anti-join applies before rung 1 too — otherwise every re-run
-        # after completion re-extracts the FULL corpus at rung 1 and
-        # appends a duplicate pass-1 snapshot (ADVICE r4).
-        if rung["pass_no"] > 1 or committed_snapshots(passes_table):
-            committed = read_snapshots(spark, passes_table)
-            recovered = merged(committed).where(
-                F.col("must_ok")).select("doc_id")
-            tried_this_rung = committed.where(
-                F.col("pass_no") >= rung["pass_no"]).select("doc_id")
-            done = recovered.unionByName(tried_this_rung)
-            todo = (documents if rung["pass_no"] == 1 else retryable).join(
-                done, "doc_id", "left_anti")
+        p = rung["pass_no"]
+        todo = documents if p == 1 else retryable
+        committed = read_snapshots(spark, passes_table)
+        if committed is not None:
+            done = committed.where(
+                (F.col("pass_no") >= p) | F.col(LADDER_MUST_FIELD).isNotNull())
+            todo = todo.join(done.select("doc_id"), "doc_id", "left_anti")
             if todo.isEmpty():
                 # nothing new for THIS rung; later rungs may still have
                 # work (crash after rung p committed, before p+1 ran)
@@ -171,13 +163,12 @@ def cascade_ladder_committed(
         ext = extract(todo, media_pages,
                       conf_threshold=rung["conf"], dpi=rung["dpi"],
                       lang=rung.get("lang"), psm=rung.get("psm"))
-        snapshot_append(_fields_for_pass(ext, rung["pass_no"]), passes_table)
+        snapshot_append(_fields_for_pass(ext, p), passes_table)
         appended_any = True
-    final = (
-        documents.select("doc_id")
-        .join(merged(read_snapshots(spark, passes_table)), "doc_id", "left")
-        .withColumn("must_ok", F.coalesce(F.col("must_ok"), F.lit(False)))
-    )
+    final = merge_retry_fields(
+        read_snapshots(spark, passes_table), LADDER_FIELD_COLS,
+        must_fields=[LADDER_MUST_FIELD],
+    ).join(documents.select("doc_id"), "doc_id", "left_semi")
     ladder_table = f"{out_dir}/fields_ladder"
     # A completed-ladder re-run extracted nothing; the merge is identical
     # to the last committed fields_ladder snapshot — don't grow the table.

@@ -18,7 +18,7 @@ One declarative DAG (SURVEY §3.1 "Spark restatement"):
         doc_id) run on that single exchange — hashpartitioning(doc_id)
         satisfies the clustered distribution of the (doc_id, text)
         window, so EnsureRequirements adds sorts only
-      → boilerplate strip (AVOID flag + repeated-block ≥k per doc)
+      → boilerplate strip (AVOID flag + repeated-block ≥REPEAT_K per doc)
       → segment key: running max of marker offsets in (offset, rank)
         order
       → array<span> per doc, sorted by (seg, rank, y, x, text) inside
@@ -52,6 +52,7 @@ from ..operators.ocr import ocr_lines
 
 SPAN_POS_RE = r"^(\d+),(\d+)\|"
 ANCHOR = 3  # rank of the per-doc anchor row: after every span, never emitted
+REPEAT_K = 3  # a line text seen this many times in one doc is boilerplate
 
 # The plan is written as SQL text: every Column-API call is a handful of
 # Py4J round trips (13 for one F.col), and building this plan that way
@@ -138,9 +139,8 @@ def decoded_media_lines(documents: DataFrame, media_pages: DataFrame,
 
 
 def extract(documents: DataFrame, media_pages: DataFrame | None = None,
-            repeat_k: int = 3, conf_threshold: int | None = None,
-            dpi: int | None = None, lang: str | None = None,
-            psm: int | None = None) -> DataFrame:
+            conf_threshold: int | None = None, dpi: int | None = None,
+            lang: str | None = None, psm: int | None = None) -> DataFrame:
     """Full extraction → documents_extracted(doc_id, spans), one row per
     distinct doc_id.
 
@@ -173,7 +173,7 @@ def extract(documents: DataFrame, media_pages: DataFrame | None = None,
         "*",
         f"count(CASE WHEN {_LINE} THEN 1 END)"
         " OVER (PARTITION BY doc_id, text) AS _rep",
-    ).where(f"NOT ({_LINE}) OR (NOT _avoid AND _rep < {int(repeat_k)})")
+    ).where(f"NOT ({_LINE}) OR (NOT _avoid AND _rep < {REPEAT_K})")
 
     # Segment key: the offset of the nearest marker at or before the row in
     # (offset, rank) order. A marker keys its own segment, its OCR lines

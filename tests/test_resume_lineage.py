@@ -144,13 +144,16 @@ def test_cascade_ladder_committed_runs_real_rungs(spark, tmp_path):
         for i, (t, c) in enumerate(
             [("TOTAL", 80), ("104,00", 80), ("AKZ", 25)])
     ])), 150))
+    # one doc_id held by two raw rows comes out once, as from extract()
+    docs.append(("d0", None, [("media", "", "page://d0/0", 0)]))
     raw = spark.createDataFrame(docs, DOCUMENTS_RAW).select("doc_id", "spans")
     pages = spark.createDataFrame(media, MEDIA_PAGE)
 
     out = str(tmp_path / "ladder")
-    final = {r["doc_id"]: r for r in
-             cascade_ladder_committed(spark, raw, pages, out).collect()}
-    assert len(final) == 10
+    rows = cascade_ladder_committed(spark, raw, pages, out).collect()
+    assert [r["doc_id"] for r in rows].count("d0") == 1
+    final = {r["doc_id"]: r for r in rows}
+    assert len(rows) == len(final) == 10
     for i in range(8):
         did, cls = f"d{i}", i % 4
         r = final[did]
@@ -184,6 +187,7 @@ def test_cascade_ladder_committed_runs_real_rungs(spark, tmp_path):
     # the committed fields_ladder table is the returned view
     tbl = read_snapshots(spark, f"{out}/fields_ladder")
     assert tbl.count() == 10
+    assert tbl.where(F.col("doc_id") == "d0").count() == 1
 
     # re-running a completed ladder whose corpus contains UNRECOVERABLE
     # docs must also be a no-op (r5 review finding: a must_ok-only done
@@ -463,7 +467,10 @@ def test_cascade_ladder_committed_rerun_is_noop_when_all_recovered(
     """Re-running a COMPLETED ladder must not re-extract the corpus at
     rung 1 nor append duplicate snapshots (ADVICE r4): the committed-
     recovery anti-join applies before rung 1 on resume, and when nothing
-    new was extracted the fields_ladder append is skipped entirely."""
+    new was extracted the fields_ladder append is skipped entirely. A doc
+    with no text line (an empty doc; a media span whose page row is
+    missing) still gets one all-null pass row per rung that tried it, so
+    it is terminal too and the re-run appends nothing."""
     from angola_erp_ocr_spark.glyph import encode_page
     from angola_erp_ocr_spark.plans.cascade import cascade_ladder_committed
     from angola_erp_ocr_spark.plans.snapshot import committed_snapshots
@@ -484,13 +491,17 @@ def test_cascade_ladder_committed_rerun_is_noop_when_all_recovered(
         did, cls = f"d{i}", i % 3
         docs.append((did, None, [("media", "", f"page://{did}/0", 0)]))
         media.append((f"page://{did}/0", 0, page(cls), 150))
+    docs.append(("empty", None, []))
+    docs.append(("no_page", None, [("media", "", "page://no_page/0", 0)]))
     raw = spark.createDataFrame(docs, DOCUMENTS_RAW).select("doc_id", "spans")
     pages = spark.createDataFrame(media, MEDIA_PAGE)
 
     out = str(tmp_path / "ladder")
     first = {r["doc_id"]: r for r in
              cascade_ladder_committed(spark, raw, pages, out).collect()}
-    assert all(r["must_ok"] for r in first.values())
+    assert len(first) == 8
+    assert {d for d, r in first.items() if not r["must_ok"]} == \
+           {"empty", "no_page"}
     n_passes = len(committed_snapshots(f"{out}/fields_passes"))
     n_ladder = len(committed_snapshots(f"{out}/fields_ladder"))
     assert n_ladder == 1
@@ -501,3 +512,4 @@ def test_cascade_ladder_committed_rerun_is_noop_when_all_recovered(
     assert len(committed_snapshots(f"{out}/fields_ladder")) == n_ladder
     assert {d: r["total_amount"] for d, r in second.items()} == \
            {d: r["total_amount"] for d, r in first.items()}
+    assert not second["empty"]["must_ok"] and not second["no_page"]["must_ok"]
