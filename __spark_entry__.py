@@ -2598,14 +2598,15 @@ def q_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``unhex(repeat(md5(text), 8))`` → an 8x16 grayscale page), encoded
     to spec-conformant PNG by the pure-numpy codec (functions/png.py,
     row filters cycling 0→4 so every unfilter path runs), then pushed
-    through the STRICT ``decode_images`` seam with the built-in
-    ``PNG_IMAGE_MODULE`` — the same injected-module path real Pillow
-    takes (reference util/ocr_pdf.py:377-380, api/util.py:8007-8051).
-    ``pixel_hex`` is the decoded raster re-hexed: it equals the oracle's
-    ``repeat(md5(text), 8)`` iff the inflate+unfilter roundtrip is
-    pixel-exact; width/height come from the decode_images output, so a
-    hash match proves the strict real-decoder path itself ran."""
-    from angola_erp_ocr_spark.functions.png import PNG_IMAGE_MODULE, encode_png
+    through ``decode_images``' default real PNG decode (the reference
+    reads page images via Pillow, util/ocr_pdf.py:377-380,
+    api/util.py:8007-8051). ``pixel_hex`` is the decoded raster
+    re-hexed: it equals the oracle's ``repeat(md5(text), 8)`` iff the
+    inflate+unfilter roundtrip is pixel-exact; width/height come from
+    the decode_images output, so a hash match proves the real-decoder
+    path itself ran."""
+    from angola_erp_ocr_spark.functions.png import (decode_png, encode_png,
+                                                    to_gray)
     from angola_erp_ocr_spark.operators.multimodal import decode_images
 
     src = _docs(spark, sf_dir).select(
@@ -2618,8 +2619,6 @@ def q_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _widen_for_arrow(spark, src)
 
     def to_png(batches):
-        import io
-
         import numpy as np
         import pandas as pd
         for pdf in batches:
@@ -2627,17 +2626,15 @@ def q_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             for doc_id, px in zip(pdf["doc_id"], pdf["pixels"]):
                 arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(8, 16)
                 blob = encode_png(arr)
-                dec = PNG_IMAGE_MODULE.open(io.BytesIO(blob)).convert("L")
                 refs.append(f"img://{int(doc_id)}")
                 blobs.append(blob)
-                hexes.append(dec.tobytes().hex())
+                hexes.append(to_gray(decode_png(blob)[0]).tobytes().hex())
             yield pd.DataFrame(
                 {"media_ref": refs, "payload": blobs, "pixel_hex": hexes})
 
     encoded = src.mapInPandas(
         to_png, schema="media_ref string, payload binary, pixel_hex string")
-    decoded = decode_images(encoded, strict=True,
-                            image_module=PNG_IMAGE_MODULE)
+    decoded = decode_images(encoded)
     return (encoded.select("media_ref", "pixel_hex")
             .join(decoded, "media_ref")
             .select(F.element_at(F.split("media_ref", "://"), 2)
@@ -2674,21 +2671,18 @@ def q_qr_real_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (alphanumeric mode, the charset real AGT portal URLs sit in) or a
     digits-only one (numeric mode), auto-selected by the encoder's
     charset rule, so all three ISO 18004 segment packings are
-    oracle-certified — rendered to PNG, then decoded
-    through the STRICT
-    ``decode_qr_media`` seam — finder-pattern detection, grid sampling,
-    format-info BCH, de-masking, Reed-Solomon correction — using the
-    same injected-module path real pyzbar takes. The decoded text is
-    returned; it equals the oracle's recomputed payload iff the whole
-    real detect->decode chain is exact. The render+decode kernel is
+    oracle-certified — rendered to PNG, then decoded by
+    ``decode_qr_media``, which calls the in-repo PNG and QR codecs
+    directly — finder-pattern detection, grid sampling, format-info BCH,
+    de-masking, Reed-Solomon correction. The decoded text is returned;
+    it equals the oracle's recomputed payload iff the whole real
+    detect->decode chain is exact. The render+decode kernel is
     stateless per row — at 100 TB the parquet scan's own splits feed it
     in parallel with no shuffle; the test tables are single-row-group
     files (one split), so an explicit round-robin repartition of the
     tiny (doc_id, <=100-char payload) rows keeps the Arrow stage parallel
     here too (measured: 116 s single-task vs ~4 s on 32 at sf0.1)."""
-    from angola_erp_ocr_spark.functions.png import PNG_IMAGE_MODULE
-    from angola_erp_ocr_spark.functions.qr import (QR_DETECTOR_MODULE,
-                                                   render_qr_png)
+    from angola_erp_ocr_spark.functions.qr import render_qr_png
     from angola_erp_ocr_spark.operators.multimodal import decode_qr_media
 
     # substring cap at 100 B: the 'M' rows must fit V6-M's 106 B for ANY
@@ -2725,9 +2719,7 @@ def q_qr_real_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     encoded = src.mapInPandas(
         to_qr_png, schema="media_ref string, payload binary")
-    decoded = decode_qr_media(encoded, strict=True,
-                              pyzbar_module=QR_DETECTOR_MODULE,
-                              image_module=PNG_IMAGE_MODULE)
+    decoded = decode_qr_media(encoded)
     return decoded.select(
         F.element_at(F.split("media_ref", "://"), 2)
          .cast("long").alias("doc_id"),

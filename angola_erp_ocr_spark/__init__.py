@@ -27,7 +27,7 @@ operators.rules       §2.11 rule-table-driven extraction engine
 operators.dedup       exact / MinHash-LSH / SimHash / n-gram-Jaccard dedup
 operators.similarity  embedding cosine top-k (brute force + LSH-bucketed ANN)
 operators.textstats   language-ID, quality scoring, token counts, fingerprints
-operators.multimodal  binary media columns: metadata, stubbed decoders
+operators.multimodal  binary media columns: metadata, PNG/QR decode
 plans.pipeline        end-to-end extract(): route → parse/OCR → order → emit
 plans.cascade         R1/R2 cheap-path-first routing + committed retry ladder
 plans.lineage         per-partition lineage rows (resume / skew audit)

@@ -1,12 +1,11 @@
-"""Pure-numpy PNG codec + a PIL-shaped module surface.
+"""Pure-numpy PNG codec + the grayscale and resize maths image decode uses.
 
 The reference decodes real page images through Pillow
 (util/ocr_pdf.py:377-380 ``pdf2image``→PIL, api/util.py:8007-8051
-PIL.Image over scanned pages). This container ships no image library, so
-until round 5 the real-decoder path of ``operators.multimodal.
-decode_images`` was exercised only through injected API stubs. This
-module removes that gap for PNG — the one raster format whose spec
-(W3C/RFC 2083) needs nothing beyond stdlib ``zlib`` and numpy:
+PIL.Image over scanned pages). No image library is assumed here; PNG is
+the one raster format whose spec (W3C/RFC 2083) needs nothing beyond
+stdlib ``zlib`` and numpy, so ``operators.multimodal.decode_images`` and
+``extract_qr`` call this codec directly:
 
 - ``decode_png(blob) -> (ndarray HxWxC uint8, color_type)`` — full
   critical-chunk decode: signature, IHDR, PLTE, concatenated IDAT
@@ -16,13 +15,10 @@ module removes that gap for PNG — the one raster format whose spec
 - ``encode_png(arr, filter_cycle=...)`` — the matching encoder; by
   default it CYCLES the row filter 0→4 so a single roundtrip test
   exercises every decoder unfilter path, not just filter 0.
-- ``PngImageModule`` / ``PNG_IMAGE_MODULE`` — an object with the PIL
-  ``Image``-module API subset the decode seam consumes
-  (``open(BytesIO).convert('L').size/.resize/.tobytes``), so
-  ``decode_images(df, strict=True, image_module=PNG_IMAGE_MODULE)`` runs
-  a REAL decode end-to-end in this sandbox (``decoder='numpy-png',
-  is_synthetic=False``). ``resize`` is area-average (box) downsampling —
-  deterministic and documented, not a PIL-bicubic emulation.
+- ``to_gray(px)`` (BT.601 luma) and ``box_resize(gray, w, h)``
+  (area-average downsampling — deterministic and documented, not a
+  PIL-bicubic emulation): the 8-px thumbnail behind ``decode_images``'
+  embedding and the grayscale plane the QR detector scans.
 
 Filter math follows the PNG spec exactly: Sub/Up/Average/Paeth operate
 per byte lane at ``bpp`` offsets, mod 256. Sub is vectorized as a
@@ -34,7 +30,6 @@ keep that loop negligible).
 """
 from __future__ import annotations
 
-import io
 import struct
 import zlib
 
@@ -216,72 +211,36 @@ def encode_png(arr: np.ndarray, filter_cycle: tuple[int, ...] = (0, 1, 2, 3, 4)
             + chunk(b"IEND", b""))
 
 
-# ---------------------------------------------------------------------------
-# PIL-shaped surface over the codec, pluggable into decode_images'
-# image_module seam (operators/multimodal.py:_pil_image_decode).
-# ---------------------------------------------------------------------------
-
-# BT.601 luma, the same weights PIL's convert('L') documents.
+# BT.601 luma, the weights Pillow's convert('L') documents.
 _LUMA = np.array([0.299, 0.587, 0.114])
 
 
-class _PngImage:
-    def __init__(self, px: np.ndarray):
-        self._px = px  # HxWxC uint8
-
-    @property
-    def size(self) -> tuple[int, int]:
-        return self._px.shape[1], self._px.shape[0]  # (width, height)
-
-    def convert(self, mode: str) -> "_PngImage":
-        if mode != "L":
-            raise ValueError(f"unsupported convert mode {mode!r}")
-        c = self._px.shape[2]
-        if c == 1:
-            gray = self._px[:, :, 0]
-        elif c == 2:                       # gray+alpha → drop alpha
-            gray = self._px[:, :, 0]
-        else:                              # RGB / RGBA → BT.601 luma
-            gray = (self._px[:, :, :3].astype(np.float64) @ _LUMA
-                    ).round().clip(0, 255).astype(np.uint8)
-        return _PngImage(gray[:, :, None])
-
-    def resize(self, size: tuple[int, int]) -> "_PngImage":
-        """Area-average (box) downsample via bin-membership matmul —
-        exact for any size ratio, deterministic, no resampling kernel."""
-        new_w, new_h = size
-        h, w, c = self._px.shape
-
-        def box(n_src: int, n_dst: int) -> np.ndarray:
-            # weight[i, j] = overlap of dst bin i with src cell j
-            edges = np.linspace(0.0, n_src, n_dst + 1)
-            wts = np.zeros((n_dst, n_src))
-            for i in range(n_dst):
-                lo, hi = edges[i], edges[i + 1]
-                j0, j1 = int(np.floor(lo)), int(np.ceil(hi))
-                for j in range(j0, min(j1, n_src)):
-                    wts[i, j] = min(hi, j + 1) - max(lo, j)
-            return wts / wts.sum(axis=1, keepdims=True)
-
-        wy, wx = box(h, new_h), box(w, new_w)
-        out = np.einsum("ij,jkc,lk->ilc", wy, self._px.astype(np.float64), wx)
-        return _PngImage(out.round().clip(0, 255).astype(np.uint8))
-
-    def tobytes(self) -> bytes:
-        return self._px.tobytes()
+def to_gray(px: np.ndarray) -> np.ndarray:
+    """HxWxC uint8 pixels (``decode_png`` output) → HxW uint8 grayscale:
+    gray and gray+alpha keep channel 0, RGB/RGBA take BT.601 luma."""
+    if px.shape[2] <= 2:
+        return px[:, :, 0]
+    return (px[:, :, :3].astype(np.float64) @ _LUMA
+            ).round().clip(0, 255).astype(np.uint8)
 
 
-class PngImageModule:
-    """Duck-typed stand-in for the ``PIL.Image`` module: ``open(fp)``.
-    ``DECODER_NAME`` feeds decode_images' provenance column so rows
-    decoded here are distinguishable from real-Pillow rows."""
+def box_resize(gray: np.ndarray, width: int, height: int) -> np.ndarray:
+    """Area-average (box) resample of a 2-D uint8 image to height x width
+    via bin-membership matmul — exact for any size ratio, deterministic,
+    no resampling kernel."""
+    h, w = gray.shape
 
-    DECODER_NAME = "numpy-png"
+    def box(n_src: int, n_dst: int) -> np.ndarray:
+        # weight[i, j] = overlap of dst bin i with src cell j
+        edges = np.linspace(0.0, n_src, n_dst + 1)
+        wts = np.zeros((n_dst, n_src))
+        for i in range(n_dst):
+            lo, hi = edges[i], edges[i + 1]
+            j0, j1 = int(np.floor(lo)), int(np.ceil(hi))
+            for j in range(j0, min(j1, n_src)):
+                wts[i, j] = min(hi, j + 1) - max(lo, j)
+        return wts / wts.sum(axis=1, keepdims=True)
 
-    @staticmethod
-    def open(fp: io.BytesIO) -> _PngImage:
-        img, _ = decode_png(fp.read())
-        return _PngImage(img)
-
-
-PNG_IMAGE_MODULE = PngImageModule()
+    out = np.einsum("ij,jk,lk->il", box(h, height), gray.astype(np.float64),
+                    box(w, width))
+    return out.round().clip(0, 255).astype(np.uint8)

@@ -1,15 +1,13 @@
-"""Pure-numpy QR encoder/decoder + a pyzbar-shaped module surface.
+"""Pure-numpy QR encoder/decoder.
 
 The reference decodes the AGT tax-portal QR printed on invoices through
 pyzbar over a PIL page image (api/util.py:8007-8051; cv2 fallback
-8083-8086) and follows the decoded URL. This container ships neither
-pyzbar nor OpenCV, so until now ``operators.multimodal.extract_qr``'s
-real-detector path was exercised only through injected API stubs. This
-module removes that gap the same way ``functions/png.py`` did for image
-decode: the QR symbology (ISO/IEC 18004) is implementable from public
-spec with nothing beyond numpy, so the strict path can run a REAL
-detect → sample → de-mask → Reed-Solomon-correct → parse decode on
-executors.
+8083-8086) and follows the decoded URL. No QR library is assumed here:
+the QR symbology (ISO/IEC 18004) is implementable from public spec with
+nothing beyond numpy, so ``operators.multimodal.extract_qr`` calls
+``decode_qr_pixels`` directly on the grayscale plane of a PNG decoded by
+``functions/png.py`` — a REAL detect → sample → de-mask →
+Reed-Solomon-correct → parse decode on executors.
 
 Scope (declared, loudly enforced — never a silent mis-decode):
 
@@ -41,16 +39,8 @@ Spark posture: QR decode is a stateless per-row kernel inside one
 Arrow-batched ``mapInPandas`` stage (``operators.multimodal.
 decode_qr_media``) — embarrassingly parallel, no shuffle, so at 100 TB
 it scales with executor count exactly like the OCR decode stage.
-
-``QR_DETECTOR_MODULE`` exposes the pyzbar API subset the seam consumes
-(``decode(pil_image) -> [Decoded(data=...)]``), so
-``extract_qr(strict=True, pyzbar_module=QR_DETECTOR_MODULE,
-image_module=PNG_IMAGE_MODULE)`` is a real end-to-end decode in this
-sandbox — the identical injected-module code path real pyzbar takes.
 """
 from __future__ import annotations
-
-from typing import NamedTuple
 
 import numpy as np
 
@@ -823,31 +813,3 @@ def decode_qr_pixels(gray: np.ndarray) -> bytes | None:
             return payload
     return None
 
-
-# ---------------------------------------------------------------------------
-# pyzbar-shaped surface for the strict extract_qr seam
-# ---------------------------------------------------------------------------
-
-class Decoded(NamedTuple):
-    data: bytes
-    type: str = "QRCODE"
-
-
-class QrDetectorModule:
-    """The pyzbar API subset ``operators.multimodal._pyzbar_qr_decode``
-    consumes: ``decode(pil_image) -> [Decoded(data=bytes)]``. The image
-    argument is any PIL-shaped object (functions/png.py's PngImage or
-    real Pillow): converted to grayscale and scanned for real."""
-
-    DECODER_NAME = "numpy-qr"
-
-    @staticmethod
-    def decode(image) -> list[Decoded]:
-        g = image.convert("L")
-        w, h = g.size
-        arr = np.frombuffer(g.tobytes(), dtype=np.uint8).reshape(h, w)
-        payload = decode_qr_pixels(arr)
-        return [Decoded(data=payload)] if payload is not None else []
-
-
-QR_DETECTOR_MODULE = QrDetectorModule()

@@ -1,11 +1,10 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 The Spark-side plumbing (schemas, partitioning, mapInPandas batch shape,
-Arrow transfer) is real and tested; the codec calls themselves are gated
-behind import-tries because the image/audio libraries are not in this
-container. Where a library is absent the decode raises NotImplementedError
-(strict mode) or produces a clearly-marked deterministic fake (default) so
-downstream feature plumbing stays testable.
+Arrow transfer) is real and tested. Image decode and QR detection call the
+in-repo numpy codecs directly (``functions/png.py``, ``functions/qr.py``);
+``decode_images(strict=False)`` is the one labeled deterministic fake
+(``decoder='fake-sha256'``), and video frame sampling is a fake digest.
 
 At 100 TB the pattern is: binaries live in the lake (or as media_ref
 pointers to object storage), the decode stage is a mapInPandas over
@@ -26,18 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-try:  # pragma: no cover - not present in this container
-    from PIL import Image  # noqa: F401
-    HAS_PIL = True
-except ImportError:
-    HAS_PIL = False
-
-try:  # pragma: no cover - not present in this container
-    from pyzbar import pyzbar  # noqa: F401
-    HAS_PYZBAR = True
-except ImportError:
-    HAS_PYZBAR = False
-
 IMAGE_FEATURES = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
     T.StructField("width", T.IntegerType(), True),
@@ -57,22 +44,21 @@ FRAME_SAMPLE = T.StructType([
 ])
 
 
-def media_metadata(df: DataFrame, ref_col: str = "media_ref",
-                   bytes_col: str = "payload") -> DataFrame:
-    """Typed metadata for binary media columns — pure built-ins (length,
-    sha2), no Python. The cheap pass that runs over everything."""
+def media_metadata(df: DataFrame) -> DataFrame:
+    """Typed metadata for (media_ref, payload) rows — pure built-ins
+    (length, sha2), no Python. The cheap pass that runs over everything."""
     return df.select(
-        F.col(ref_col).alias("media_ref"),
-        F.element_at(F.split(ref_col, "://"), 1).alias("media_type"),
-        F.length(F.col(bytes_col)).cast("long").alias("n_bytes"),
-        F.sha2(F.col(bytes_col), 256).alias("sha256"),
+        "media_ref",
+        F.element_at(F.split("media_ref", "://"), 1).alias("media_type"),
+        F.length("payload").cast("long").alias("n_bytes"),
+        F.sha2("payload", 256).alias("sha256"),
     )
 
 
 def _fake_image_decode(blob: bytes) -> tuple[int, int, list[float]]:
     """Deterministic stand-in for a real decoder: dimensions and an
     8-dim 'embedding' derived from the payload digest. CLEARLY FAKE —
-    replace with PIL/torchvision when available."""
+    every row it feeds is labeled ``decoder='fake-sha256'``."""
     d = hashlib.sha256(blob).digest()
     width = 64 + d[0] % 192
     height = 64 + d[1] % 192
@@ -80,91 +66,54 @@ def _fake_image_decode(blob: bytes) -> tuple[int, int, list[float]]:
     return width, height, emb
 
 
-def _pil_image_decode(pil_image_mod,
-                      blob: bytes) -> tuple[int, int, list[float]]:
-    """The REAL-decoder integration path (reference renders/reads page
-    images via PIL, util/ocr_pdf.py:377-380, api/util.py:8007-8051).
-    Consumes the PIL ``Image`` module SURFACE — ``open(BytesIO) →
-    convert('L') → .size / resize / tobytes`` — through an injected
-    module object, so the identical code runs against real Pillow when
-    installed AND against the stubbed API surface in the contract test
-    (tests/test_dataops.py), proving the strict-gate integration
-    composes before the library ever lands in the image (VERDICT r4
-    task 5). Feature = 8-px grayscale thumbnail row, normalized."""
-    import io
-    img = pil_image_mod.open(io.BytesIO(bytes(blob))).convert("L")
-    width, height = img.size
-    emb = [round(b / 255.0, 6) for b in img.resize((8, 1)).tobytes()[:8]]
+def _png_image_decode(blob: bytes) -> tuple[int, int, list[float]]:
+    """Real PNG decode (functions/png.py; the reference reads page images
+    via PIL, util/ocr_pdf.py:377-380, api/util.py:8007-8051). Feature =
+    8-px grayscale box-thumbnail row, normalized. Non-PNG or corrupt
+    bytes raise ValueError."""
+    from ..functions.png import box_resize, decode_png, to_gray
+
+    gray = to_gray(decode_png(blob)[0])
+    height, width = gray.shape
+    emb = [round(b / 255.0, 6) for b in box_resize(gray, 8, 1)[0].tolist()]
     return width, height, emb
 
 
-def decode_images(df: DataFrame, ref_col: str = "media_ref",
-                  bytes_col: str = "payload", strict: bool = True,
-                  image_module=None) -> DataFrame:
-    """Image decode / feature-extract as an Arrow-batched mapInPandas stage.
+def decode_images(df: DataFrame, strict: bool = True) -> DataFrame:
+    """Image decode / feature-extract over (media_ref, payload) rows as an
+    Arrow-batched mapInPandas stage.
 
-    STRICT BY DEFAULT (production posture): raises NotImplementedError
-    when no real decoder exists, so no pipeline can silently ship fake
-    features. ``strict=False`` is an explicit sandbox opt-in that emits
-    the deterministic fake — and every emitted row carries
-    ``decoder``/``is_synthetic`` provenance columns so even an opted-in
-    caller cannot persist fakes unlabeled (VERDICT r2; the real-decoder
-    seam is reference util/ocr_pdf.py:377, api/util.py:8007-8051).
-
-    ``image_module``: injected PIL ``Image`` module surface. A caller
-    (or contract test) may pass any object with the same API; when a
-    decoder is present the rows are REAL: ``decoder='pil',
-    is_synthetic=False`` via ``_pil_image_decode``. The injected object
-    is captured in the UDF closure (pickled by value for test stubs, by
-    reference for the real installed library), so the decode runs on
-    executors either way.
-
-    The real Pillow is auto-selected ONLY in strict mode: ``strict=True``
-    means "decode for real or fail loudly". ``strict=False`` emits the
-    labeled deterministic fake even when Pillow happens to be importable
-    — callers of the fake path (the ``multimodal_decode`` oracle, the
-    bench corpus whose payloads are UTF-8 text, not images) must never
-    start routing non-image bytes into a real decoder because the
-    environment gained a library.
-    """
-    if image_module is None and strict and HAS_PIL:  # pragma: no cover
-        from PIL import Image as image_module
-    if image_module is not None:
-        # Provenance names the actual decoder: an injected module may
-        # declare DECODER_NAME (the built-in pure-numpy PNG codec,
-        # functions/png.py, declares 'numpy-png'); default 'pil'.
-        decoder = getattr(image_module, "DECODER_NAME", "pil")
-        synthetic = False
-    else:
-        decoder, synthetic = "fake-sha256", True
+    ``strict=True`` (the default) decodes PNG for real: rows carry
+    ``decoder='numpy-png', is_synthetic=False``, and non-PNG or corrupt
+    bytes fail the stage with ValueError — never a fake. ``strict=False``
+    is an explicit opt-in to the deterministic fake for payloads that are
+    not images (the ``multimodal_decode`` query's corpus): every row is
+    labeled ``decoder='fake-sha256', is_synthetic=True`` so no caller can
+    persist fake features unlabeled (VERDICT r2)."""
+    decode, decoder = ((_png_image_decode, "numpy-png") if strict
+                       else (_fake_image_decode, "fake-sha256"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if strict and image_module is None:
-            raise NotImplementedError(
-                "image decode requires PIL/torchvision — not in this "
-                "container; pass strict=False to emit labeled fakes")
         for pdf in batches:
             rows = []
-            for ref, blob in zip(pdf[ref_col], pdf[bytes_col]):
-                if image_module is not None:
-                    w, h, emb = _pil_image_decode(image_module, bytes(blob))
-                else:
-                    w, h, emb = _fake_image_decode(bytes(blob))
+            for ref, blob in zip(pdf["media_ref"], pdf["payload"]):
+                w, h, emb = decode(bytes(blob))
                 rows.append(dict(media_ref=ref, width=w, height=h,
                                  embedding=emb, decoder=decoder,
-                                 is_synthetic=synthetic))
+                                 is_synthetic=not strict))
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES])
 
-    return df.select(ref_col, bytes_col).mapInPandas(run, schema=IMAGE_FEATURES)
+    return df.select("media_ref", "payload").mapInPandas(
+        run, schema=IMAGE_FEATURES)
 
 
 # ---------------------------------------------------------------------------
 # I10 — QR detect/decode (reference api/util.py:8007-8051 pyzbar,
 # 8083-8086 cv2.QRCodeDetector; decoded URL feeds the AGT tax-portal
-# lookup 8087-8174). Real decoders are gated (pyzbar/OpenCV absent in this
-# container); the deterministic stand-in is a binary QR payload container
-# appended to the glyph-grid page blob (one binary per page holding both
-# the word grid and the QR region, like a real page image):
+# lookup 8087-8174). PNG page images go through the in-repo detector
+# (functions/qr.py); glyph-grid pages carry a binary QR payload container
+# appended to the page blob (one binary per page holding both the word
+# grid and the QR region, like a real page image):
 #
 #     b"QR01" + uint16le payload_len + payload_utf8 + uint8 xor_checksum
 # ---------------------------------------------------------------------------
@@ -211,44 +160,19 @@ def extract_qr_at(blob: bytes, off: int) -> str | None:
     return body.decode("utf-8")
 
 
-def _pyzbar_qr_decode(pyzbar_mod, pil_image_mod, blob: bytes) -> str | None:
-    """The REAL-detector integration path (reference api/util.py:8007-8051
-    pyzbar over a PIL image). Consumes the pyzbar/PIL API surfaces through
-    injected module objects — the same code runs against the real
-    libraries when installed and against the contract test's stubs."""
-    import io
-    codes = pyzbar_mod.decode(pil_image_mod.open(io.BytesIO(bytes(blob))))
-    return codes[0].data.decode("utf-8") if codes else None
-
-
-def _require_module_pair(pyzbar_module, image_module, caller: str) -> None:
-    """The detector/image module surfaces are a PAIR — injecting exactly
-    one is a caller error (a stub on one side with a silently-resolved
-    real library on the other would mix test and production surfaces)."""
-    if (pyzbar_module is None) != (image_module is None):
-        raise ValueError(
-            f"{caller}: inject pyzbar_module and image_module together "
-            "(the decode consumes both surfaces)")
-
-
-def extract_qr(blob: bytes, strict: bool = False,
-               pyzbar_module=None, image_module=None) -> str | None:
+def extract_qr(blob: bytes) -> str | None:
     """Decode the QR payload of a page blob, or None when absent.
 
     Glyph-grid pages: the QR container sits exactly at the grid's payload
     end (no scanning, no false positives; a corrupt checksum → None).
-    Other binaries (real page images): require a real detector —
-    ``pyzbar_module``/``image_module`` when injected, else the installed
-    pyzbar when available, else None (strict=True raises, the production
-    posture when image codecs are expected).
-
-    A REAL in-repo detector pair exists for PNG-rendered symbols:
-    ``functions.qr.QR_DETECTOR_MODULE`` + ``functions.png.
-    PNG_IMAGE_MODULE`` (pure numpy; finder detection, de-masking,
-    Reed-Solomon correction). Injection stays explicit by design (r5
-    self-review: real decoders are opt-in, never auto-selected), and the
-    pair is oracle-certified end-to-end by the ``qr_real_roundtrip``
-    contract query."""
+    Any other blob is decoded as PNG (functions/png.py), converted to
+    grayscale and scanned by the numpy QR detector (functions/qr.py:
+    finder detection, de-masking, Reed-Solomon correction) — None when
+    the image holds no decodable symbol, ValueError when the bytes are
+    not a decodable PNG. Oracle-certified end-to-end by the
+    ``qr_real_roundtrip`` contract query."""
+    from ..functions.png import decode_png, to_gray
+    from ..functions.qr import decode_qr_pixels
     from ..glyph import MAGIC, payload_end
 
     if blob[:4] == MAGIC:
@@ -257,43 +181,19 @@ def extract_qr(blob: bytes, strict: bool = False,
         except (ValueError, struct.error):
             return None
         return extract_qr_at(blob, off)
-    # the two module surfaces are a PAIR: auto-select the installed
-    # libraries only when NEITHER is injected (injecting one stub while
-    # the other silently resolves to a real library would mix test and
-    # production surfaces); injecting exactly one is a caller error.
-    _require_module_pair(pyzbar_module, image_module, "extract_qr")
-    if pyzbar_module is None and HAS_PYZBAR:  # pragma: no cover - real libs
-        import io  # noqa: F401 (parity with the injected path)
-        from PIL import Image as image_module
-        from pyzbar import pyzbar as pyzbar_module
-    if pyzbar_module is not None:
-        return _pyzbar_qr_decode(pyzbar_module, image_module, blob)
-    if strict:
-        raise NotImplementedError(
-            "QR decode on real images requires pyzbar/OpenCV — "
-            "not in this container")
-    return None
+    payload = decode_qr_pixels(to_gray(decode_png(blob)[0]))
+    return None if payload is None else payload.decode("utf-8")
 
 
-def decode_qr_media(df: DataFrame, ref_col: str = "media_ref",
-                    bytes_col: str = "payload",
-                    strict: bool = False,
-                    pyzbar_module=None, image_module=None) -> DataFrame:
-    """mapInPandas QR stage over (ref, bytes) batches → one row per page
-    that carries a decodable QR: (media_ref, qr_text). Injected detector
-    modules (see ``extract_qr``) travel in the UDF closure to executors.
+def decode_qr_media(df: DataFrame) -> DataFrame:
+    """mapInPandas QR stage over (media_ref, payload) batches → one row per
+    page that carries a decodable QR: (media_ref, qr_text).
 
     Per the "one row per page that carries a DECODABLE QR" contract, a
     blob whose image itself cannot be decoded (corrupt/unknown bytes —
-    the decoder pair raises ValueError) yields no row, exactly like a
+    ``extract_qr`` raises ValueError) yields no row, exactly like a
     readable page with no QR on it; at 100 TB one rotted blob must not
-    fail the stage after task retries. Configuration errors
-    (NotImplementedError from a missing detector, mismatched injection)
-    still fail loudly — those are operator mistakes, not data quality."""
-    # mismatched injection is a caller error: fail at plan time,
-    # not per-row on executors (same rule as extract_qr)
-    _require_module_pair(pyzbar_module, image_module, "decode_qr_media")
-
+    fail the stage after task retries."""
     schema = T.StructType([
         T.StructField("media_ref", T.StringType(), False),
         T.StructField("qr_text", T.StringType(), False),
@@ -302,11 +202,9 @@ def decode_qr_media(df: DataFrame, ref_col: str = "media_ref",
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             refs, texts = [], []
-            for ref, blob in zip(pdf[ref_col], pdf[bytes_col]):
+            for ref, blob in zip(pdf["media_ref"], pdf["payload"]):
                 try:
-                    qr = extract_qr(bytes(blob), strict=strict,
-                                    pyzbar_module=pyzbar_module,
-                                    image_module=image_module)
+                    qr = extract_qr(bytes(blob))
                 except ValueError:
                     qr = None  # undecodable image: data, not config
                 if qr is not None:
@@ -314,7 +212,7 @@ def decode_qr_media(df: DataFrame, ref_col: str = "media_ref",
                     texts.append(qr)
             yield pd.DataFrame({"media_ref": refs, "qr_text": texts})
 
-    return df.select(ref_col, bytes_col).mapInPandas(run, schema=schema)
+    return df.select("media_ref", "payload").mapInPandas(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -442,8 +340,7 @@ def annotate_pages(media_pages: DataFrame,
         .mapInPandas(run, schema)
 
 
-def sample_frames(df: DataFrame, every_n: int = 10, ref_col: str = "media_ref",
-                  bytes_col: str = "payload") -> DataFrame:
+def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame sampling plumbing: emits one row per sampled frame.
     Frame decode is the fake digest (no av/ffmpeg here); the batch→multi-row
     fan-out shape is the real contract. The digest salts with the DECIMAL
@@ -454,7 +351,7 @@ def sample_frames(df: DataFrame, every_n: int = 10, ref_col: str = "media_ref",
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for ref, blob in zip(pdf[ref_col], pdf[bytes_col]):
+            for ref, blob in zip(pdf["media_ref"], pdf["payload"]):
                 blob = bytes(blob)
                 n_frames = max(1, len(blob) // 256)
                 for f in range(0, n_frames, every_n):
@@ -462,4 +359,5 @@ def sample_frames(df: DataFrame, every_n: int = 10, ref_col: str = "media_ref",
                     rows.append(dict(media_ref=ref, frame_no=f, frame_sha=sha))
             yield pd.DataFrame(rows, columns=["media_ref", "frame_no", "frame_sha"])
 
-    return df.select(ref_col, bytes_col).mapInPandas(run, schema=FRAME_SAMPLE)
+    return df.select("media_ref", "payload").mapInPandas(
+        run, schema=FRAME_SAMPLE)

@@ -249,14 +249,14 @@ PREPROCESS_OUT = T.StructType([
 ])
 
 
-def preprocess_pages(df: DataFrame, ref_col: str = "media_ref",
-                     bytes_col: str = "payload") -> DataFrame:
-    """I1→I2→I4→I3 over raster pages, one row of features per page."""
+def preprocess_pages(df: DataFrame) -> DataFrame:
+    """I1→I2→I4→I3 over (media_ref, payload) raster pages, one row of
+    features per page."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for ref, blob in zip(pdf[ref_col], pdf[bytes_col]):
+            for ref, blob in zip(pdf["media_ref"], pdf["payload"]):
                 img = decode_raster(bytes(blob))
                 mask, t = otsu_threshold(img)              # I1
                 mask = opening(mask, 3)                    # I2 denoise
@@ -272,5 +272,5 @@ def preprocess_pages(df: DataFrame, ref_col: str = "media_ref",
             yield pd.DataFrame(
                 rows, columns=[f.name for f in PREPROCESS_OUT.fields])
 
-    return df.select(ref_col, bytes_col).mapInPandas(
+    return df.select("media_ref", "payload").mapInPandas(
         run, schema=PREPROCESS_OUT)

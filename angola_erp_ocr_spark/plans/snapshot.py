@@ -24,6 +24,7 @@ import os
 import time
 import uuid
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -59,7 +60,7 @@ def _next_seq(mdir: str) -> int:
     another writer holds."""
     seqs = [-1]
     for name in os.listdir(mdir):
-        stem = name.split(".", 1)[0].split("-", 1)[0]
+        stem = name.split(".", 1)[0]
         if stem.isdigit():
             seqs.append(int(stem))
     return max(seqs) + 1
@@ -72,8 +73,8 @@ def snapshot_append(df: DataFrame, table_dir: str,
     run_id = run_id or uuid.uuid4().hex[:12]
     data_dir = os.path.join(table_dir, "data", run_id)
     df.write.mode("overwrite").parquet(data_dir)
-    spark = df.sparkSession
-    n_rows = spark.read.parquet(data_dir).count()
+    # count from the written footers, no Spark job (skips _SUCCESS/.crc)
+    n_rows = ds.dataset(data_dir, format="parquet").count_rows()
 
     os.makedirs(_manifest_dir(table_dir), exist_ok=True)
     # Claim the sequence number atomically: O_CREAT|O_EXCL on the
@@ -125,9 +126,6 @@ def expire_snapshots(table_dir: str, keep_last: int = 10) -> list[str]:
     dropped = []
     for s in doomed:
         path = os.path.join(_manifest_dir(table_dir), f"{s['seq']:06d}.json")
-        if not os.path.exists(path):  # legacy <seq>-<snapshot_id> layout
-            path = os.path.join(_manifest_dir(table_dir),
-                                f"{s['seq']:06d}-{s['snapshot_id']}.json")
         if os.path.exists(path):
             os.remove(path)
             dropped.append(s["data_dir"])

@@ -160,20 +160,30 @@ def test_media_metadata_and_image_stub(spark):
 
 def test_decode_images_strict_by_default(spark):
     """Production posture: without an explicit strict=False opt-in, the
-    decode stage must REFUSE to run rather than emit fakes — a pipeline
-    entry point can never silently persist synthetic embeddings."""
+    decode stage decodes for real — a PNG becomes a numpy-png row, and
+    bytes that are not a PNG fail the stage with ValueError, never a
+    fake — so a pipeline entry point can never silently persist
+    synthetic embeddings."""
     import inspect
 
+    import numpy as np
     import pytest as _pytest
+
+    from angola_erp_ocr_spark.functions.png import encode_png
 
     assert inspect.signature(
         multimodal.decode_images).parameters["strict"].default is True
+    png = spark.createDataFrame(
+        [("image://a/1", bytearray(encode_png(np.zeros((2, 3), np.uint8))))],
+        "media_ref string, payload binary")
+    [row] = multimodal.decode_images(png).collect()
+    assert (row["width"], row["height"]) == (3, 2)
+    assert row["decoder"] == "numpy-png" and row["is_synthetic"] is False
     df = spark.createDataFrame([("image://a/1", bytearray(b"x"))],
                                "media_ref string, payload binary")
     with _pytest.raises(Exception) as ei:
         multimodal.decode_images(df).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError)
+    assert "ValueError" in str(ei.value) and "not a PNG" in str(ei.value)
 
 
 def test_frame_sampling(spark):
@@ -424,127 +434,12 @@ def test_semdedup_recall_vs_brute_force(spark):
     assert got_pairs <= truth            # cell-bounded verify is exact
 
 
-def test_real_decoder_seam_composes_with_stubbed_pil(spark):
-    """r5 VERDICT task 5: the strict gate's REAL-decoder integration path
-    (_pil_image_decode consuming the PIL Image API surface) runs
-    end-to-end against a stubbed library — strict=True, on executors,
-    emitting decoder='pil', is_synthetic=False rows whose shape matches
-    the labeled-fake output exactly. The stub parses a tiny self-framed
-    format (b'SIMG' + u8 w + u8 h + w*h pixel bytes) the way Pillow
-    parses a PNG; the class is defined inside the test so cloudpickle
-    ships it by VALUE to the Python workers, exactly as a monkeypatched
-    library surface would have to travel."""
-
-    class StubImg:
-        def __init__(self, w, h, px):
-            self.size = (w, h)
-            self._px = px
-
-        def convert(self, mode):
-            assert mode == "L"
-            return self
-
-        def resize(self, wh):
-            w, _ = wh
-            step = max(1, len(self._px) // w)
-            return StubImg(w, 1, self._px[::step][:w])
-
-        def tobytes(self):
-            return self._px
-
-    def stub_open(fp):
-        data = fp.read()
-        assert data[:4] == b"SIMG"
-        w, h = data[4], data[5]
-        return StubImg(w, h, data[6:6 + w * h])
-
-    import types
-    stub_pil_image = types.SimpleNamespace(open=stub_open)
-
-    def simg(w, h, seed):
-        return bytes([83, 73, 77, 71, w, h]) + bytes(
-            (seed + i * 7) % 256 for i in range(w * h))
-
-    rows = [("image://s/1", bytearray(simg(16, 4, 3))),
-            ("image://s/2", bytearray(simg(10, 2, 90)))]
-    df = spark.createDataFrame(rows, "media_ref string, payload binary")
-
-    out = {r["media_ref"]: r for r in multimodal.decode_images(
-        df, strict=True, image_module=stub_pil_image).collect()}
-    assert set(out) == {"image://s/1", "image://s/2"}
-    r1 = out["image://s/1"]
-    assert (r1["width"], r1["height"]) == (16, 4)
-    assert r1["decoder"] == "pil" and r1["is_synthetic"] is False
-    assert len(r1["embedding"]) == 8
-    # first thumbnail px (array<float> roundtrip → float32 tolerance)
-    assert abs(r1["embedding"][0] - 3 / 255.0) < 1e-6
-    # shape parity with the labeled-fake path (same schema, same widths)
-    fake = multimodal.decode_images(df, strict=False).columns
-    assert multimodal.decode_images(
-        df, strict=True, image_module=stub_pil_image).columns == fake
-
-
-def test_real_qr_detector_seam_composes_with_stubbed_pyzbar(spark):
-    """Same proof for the QR strict gate: a non-glyph binary routed
-    through _pyzbar_qr_decode against stubbed pyzbar/PIL surfaces,
-    driver-side (extract_qr) and on executors (decode_qr_media)."""
-    import types
-
-    class Code:
-        def __init__(self, data):
-            self.data = data
-
-    def stub_decode(img):
-        # "detect" the QR by reading the stub image's payload tail
-        body = img.payload
-        return [Code(body)] if body else []
-
-    class StubImg2:
-        def __init__(self, payload):
-            self.payload = payload
-
-    def stub_open(fp):
-        data = fp.read()
-        assert data[:4] == b"\x89PNG"
-        return StubImg2(data[4:])
-
-    stub_pyzbar = types.SimpleNamespace(decode=stub_decode)
-    stub_pil = types.SimpleNamespace(open=stub_open)
-
-    blob = b"\x89PNG" + b"https://portaldocontribuinte.minfin.gov.ao/x"
-    got = multimodal.extract_qr(blob, strict=True,
-                                pyzbar_module=stub_pyzbar,
-                                image_module=stub_pil)
-    assert got == "https://portaldocontribuinte.minfin.gov.ao/x"
-    # no detection → None, not a crash
-    assert multimodal.extract_qr(b"\x89PNG", strict=True,
-                                 pyzbar_module=stub_pyzbar,
-                                 image_module=stub_pil) is None
-    # glyph-grid pages still take the exact container path, stub unused
-    from angola_erp_ocr_spark.glyph import encode_page
-    page = multimodal.embed_qr(encode_page([]), "GLYPH-QR")
-    assert multimodal.extract_qr(page, strict=True,
-                                 pyzbar_module=stub_pyzbar,
-                                 image_module=stub_pil) == "GLYPH-QR"
-
-    # executor-side: the stubs travel in the mapInPandas closure
-    df = spark.createDataFrame(
-        [("image://q/1", bytearray(blob)), ("image://q/2", bytearray(b"\x89PNG"))],
-        "media_ref string, payload binary")
-    rows = multimodal.decode_qr_media(df, strict=True,
-                                      pyzbar_module=stub_pyzbar,
-                                      image_module=stub_pil).collect()
-    assert [(r["media_ref"], r["qr_text"]) for r in rows] == [
-        ("image://q/1", "https://portaldocontribuinte.minfin.gov.ao/x")]
-
-
 def test_png_codec_roundtrip_all_types_and_filters():
     """Pure-numpy PNG codec (functions/png.py): pixel-exact roundtrip
     for every color type and every row-filter type, palette expansion
     against a hand-framed PNG, loud rejection of malformed/unsupported
     inputs. This is the decoder png_roundtrip's oracle certifies at
     sf0.01 — here it's pinned library-side, spark-free."""
-    import io
     import struct
     import zlib
 
@@ -590,11 +485,11 @@ def test_png_codec_roundtrip_all_types_and_filters():
     with pytest.raises(ValueError, match="interlace"):
         png.decode_png(png._SIGNATURE + chunk(b"IHDR", ihdr_adam7))
 
-    # PIL-shaped surface: luma + area-average resize are deterministic
+    # luma + area-average resize are deterministic
     const = np.full((20, 30, 3), 200, dtype=np.uint8)
-    thumb = (png.PNG_IMAGE_MODULE.open(io.BytesIO(png.encode_png(const)))
-             .convert("L").resize((8, 1)))
-    assert thumb.size == (8, 1) and set(thumb.tobytes()) == {200}
+    thumb = png.box_resize(
+        png.to_gray(png.decode_png(png.encode_png(const))[0]), 8, 1)
+    assert thumb.shape == (1, 8) and set(thumb.tobytes()) == {200}
 
 
 def test_png_rejects_corruption_loudly():
@@ -643,14 +538,14 @@ def test_png_rejects_corruption_loudly():
         png.decode_png(short_ihdr)
 
 
-def test_png_real_decode_through_strict_seam(spark):
-    """decode_images(strict=True, image_module=PNG_IMAGE_MODULE) runs a
-    REAL decode on executors in this sandbox — no injection stub, no
-    fake: actual inflate + unfilter of spec-conformant PNG bytes, rows
-    labeled decoder='numpy-png', is_synthetic=False."""
+def test_decode_images_real_png_decode(spark):
+    """decode_images(df) runs a REAL decode on executors — actual
+    inflate + unfilter of spec-conformant PNG bytes, rows labeled
+    decoder='numpy-png', is_synthetic=False, with the same schema as
+    the labeled-fake output."""
     import numpy as np
 
-    from angola_erp_ocr_spark.functions.png import PNG_IMAGE_MODULE, encode_png
+    from angola_erp_ocr_spark.functions.png import encode_png
 
     rgb = np.zeros((4, 16, 3), dtype=np.uint8)
     rgb[:, :, 0] = 255                      # pure red → luma 76
@@ -658,8 +553,7 @@ def test_png_real_decode_through_strict_seam(spark):
             ("image://png/gray", bytearray(encode_png(
                 np.full((2, 8), 51, dtype=np.uint8))))]
     df = spark.createDataFrame(rows, "media_ref string, payload binary")
-    out = {r["media_ref"]: r for r in multimodal.decode_images(
-        df, strict=True, image_module=PNG_IMAGE_MODULE).collect()}
+    out = {r["media_ref"]: r for r in multimodal.decode_images(df).collect()}
 
     r1 = out["image://png/rgb"]
     assert (r1["width"], r1["height"]) == (16, 4)
@@ -669,3 +563,7 @@ def test_png_real_decode_through_strict_seam(spark):
     r2 = out["image://png/gray"]
     assert (r2["width"], r2["height"]) == (8, 2)
     assert all(abs(v - 51 / 255.0) < 1e-6 for v in r2["embedding"])
+    # shape parity with the labeled-fake path (same schema, same widths)
+    assert len(r1["embedding"]) == 8
+    assert (multimodal.decode_images(df).schema
+            == multimodal.decode_images(df, strict=False).schema)

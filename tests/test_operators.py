@@ -287,9 +287,13 @@ def test_conf_sentinel_excluded_from_ocr(spark):
 
 def test_qr_codec_roundtrip_and_gates(spark):
     """I10: embedded QR decodes exactly; corrupt checksum and QR-less
-    pages yield nothing; strict mode raises on non-glyph binaries."""
+    pages yield nothing; a PNG page image decodes through the numpy
+    detector with no arguments; non-PNG, non-glyph bytes raise."""
+    import numpy as np
     import pytest
 
+    from angola_erp_ocr_spark.functions.png import encode_png
+    from angola_erp_ocr_spark.functions.qr import render_qr_png
     from angola_erp_ocr_spark.glyph import encode_page
     from angola_erp_ocr_spark.operators.multimodal import (
         decode_qr_media, embed_qr, extract_qr)
@@ -302,8 +306,12 @@ def test_qr_codec_roundtrip_and_gates(spark):
     assert extract_qr(page) is None                  # no QR on the page
     corrupt = blob[:-1] + bytes([blob[-1] ^ 0xFF])   # checksum broken
     assert extract_qr(corrupt) is None
-    with pytest.raises(NotImplementedError):
-        extract_qr(b"\x89PNG not a glyph grid", strict=True)
+    payload = "https://portaldocontribuinte.minfin.gov.ao/x"
+    assert extract_qr(render_qr_png(payload.encode())) == payload
+    # a readable PNG with no symbol on it → None, not a crash
+    assert extract_qr(encode_png(np.zeros((12, 12), np.uint8))) is None
+    with pytest.raises(ValueError, match="not a PNG"):
+        extract_qr(b"\x89PNG not a glyph grid")
 
     pages = spark.createDataFrame(
         [("m1", bytearray(blob)), ("m2", bytearray(page))],

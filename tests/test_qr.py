@@ -1,23 +1,19 @@
-"""Real QR decode (functions/qr.py): the pyzbar-gated strict seam now
-executes a genuine detect -> sample -> de-mask -> Reed-Solomon-correct ->
-parse decode in this sandbox (reference api/util.py:8007-8051 decodes
-the AGT invoice QR through pyzbar over a PIL page image). Library-side
-pins here; the Spark-side oracle certification is the contract query
-``qr_real_roundtrip`` (CONTRACT_LOCAL_r05.txt)."""
-import io
-
+"""Real QR decode (functions/qr.py): a genuine detect -> sample ->
+de-mask -> Reed-Solomon-correct -> parse decode, called directly by
+``operators.multimodal.extract_qr`` (reference api/util.py:8007-8051
+decodes the AGT invoice QR through pyzbar over a PIL page image).
+Library-side pins here; the Spark-side oracle certification is the
+contract query ``qr_real_roundtrip`` (CONTRACT_LOCAL_r05.txt)."""
 import numpy as np
 import pytest
 
 from angola_erp_ocr_spark.functions import qr
-from angola_erp_ocr_spark.functions.png import PNG_IMAGE_MODULE
+from angola_erp_ocr_spark.functions.png import decode_png, to_gray
 from angola_erp_ocr_spark.operators import multimodal
 
 
 def _gray(png_blob: bytes) -> np.ndarray:
-    img = PNG_IMAGE_MODULE.open(io.BytesIO(png_blob)).convert("L")
-    w, h = img.size
-    return np.frombuffer(img.tobytes(), np.uint8).reshape(h, w)
+    return to_gray(decode_png(png_blob)[0])
 
 
 def test_rs_corrects_up_to_design_distance():
@@ -209,19 +205,14 @@ def test_qr_correction_capacity_respects_misdecode_reservation():
 def test_decode_qr_media_skips_corrupt_blobs_not_the_stage(spark):
     """One rotted blob in a 100-TB corpus must not fail the stage: an
     undecodable IMAGE (non-PNG bytes, bad CRC) yields no row — same as
-    a readable page with no QR — while a mismatched module injection
-    still fails loudly at plan time (config, not data)."""
+    a readable page with no QR."""
     payload = b"QR-ok-0123456789abcdef"
     rows = [("image://ok", bytearray(qr.render_qr_png(payload, scale=2))),
             ("image://rot", bytearray(b"\xff\xd8\xff not a png at all"))]
     df = spark.createDataFrame(rows, "media_ref string, payload binary")
-    got = multimodal.decode_qr_media(
-        df, strict=True, pyzbar_module=qr.QR_DETECTOR_MODULE,
-        image_module=PNG_IMAGE_MODULE).collect()
+    got = multimodal.decode_qr_media(df).collect()
     assert [(r["media_ref"], r["qr_text"]) for r in got] == [
         ("image://ok", payload.decode())]
-    with pytest.raises(ValueError, match="together"):
-        multimodal.decode_qr_media(df, pyzbar_module=qr.QR_DETECTOR_MODULE)
 
 
 def test_certification_queries_are_not_split_starved(spark):
@@ -260,11 +251,10 @@ def test_qr_unsupported_inputs_fail_loudly():
         qr.decode_qr_matrix(np.zeros((45, 45), dtype=bool))  # V7 grid
 
 
-def test_real_qr_decode_through_strict_seam(spark):
-    """extract_qr(strict=True) with the built-in numpy QR detector +
-    PNG image module runs a REAL decode on executors — the identical
-    injected-module path real pyzbar takes — via decode_qr_media; a
-    non-QR PNG yields no row rather than a fake."""
+def test_decode_qr_media_real_png_decode(spark):
+    """decode_qr_media(df) runs a REAL PNG decode + numpy QR detect on
+    executors for every rendered symbol; a non-QR PNG yields no row
+    rather than a fake."""
     payloads = {f"image://qr/{i}":
                 f"QR-{i}-{'ab3f9c01d7e25468'[:16]}" for i in range(4)}
     rows = [(ref, bytearray(qr.render_qr_png(
@@ -275,10 +265,8 @@ def test_real_qr_decode_through_strict_seam(spark):
     rows.append(("image://qr/none", bytearray(encode_png(
         np.zeros((12, 12), dtype=np.uint8)))))
     df = spark.createDataFrame(rows, "media_ref string, payload binary")
-    out = multimodal.decode_qr_media(
-        df, strict=True, pyzbar_module=qr.QR_DETECTOR_MODULE,
-        image_module=PNG_IMAGE_MODULE)
-    got = {r["media_ref"]: r["qr_text"] for r in out.collect()}
+    got = {r["media_ref"]: r["qr_text"]
+           for r in multimodal.decode_qr_media(df).collect()}
     assert got == payloads
 
 
@@ -339,9 +327,7 @@ def test_qr_multisegment_stream_roundtrip():
                          np.ones((2, 2), np.uint8)), 8,
                  constant_values=255)
     assert qr.decode_qr_pixels(img) == want
-    assert (qr.QR_DETECTOR_MODULE.decode(
-        PNG_IMAGE_MODULE.open(io.BytesIO(encode_png(img))))[0].data
-        == want)
+    assert qr.decode_qr_pixels(_gray(encode_png(img))) == want
     with pytest.raises(ValueError, match="charset"):
         qr.encode_qr_matrix(segments=[(b"abc", qr.MODE_NUMERIC)])
     with pytest.raises(ValueError, match="charset"):

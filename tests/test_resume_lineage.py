@@ -362,10 +362,13 @@ def test_snapshot_expiry(spark, tmp_path):
     df = spark.range(3).selectExpr("cast(id as string) doc_id")
     table = str(tmp_path / "tbl")
     for _ in range(4):
-        snapshot_append(df, table)
+        assert snapshot_append(df, table)["n_rows"] == 3
     dropped = expire_snapshots(table, keep_last=2)
     assert len(dropped) == 2
     assert len(committed_snapshots(table)) == 2
+    # an empty frame commits a snapshot with n_rows == 0
+    assert snapshot_append(df.limit(0), table)["n_rows"] == 0
+    assert len(committed_snapshots(table)) == 3
 
 
 def test_extract_emits_empty_docs(spark):
