@@ -207,7 +207,6 @@ def segment_blocks(words: DataFrame) -> DataFrame:
 def ocr_lines(media_pages: DataFrame, passthrough: tuple[str, ...] = (),
               conf_threshold: int = CONF_THRESHOLD,
               emit_qr: bool = False, dpi: int | None = None,
-              deskew: bool = True,
               lexicon: frozenset[str] | None = None,
               psm: int = 6) -> DataFrame:
     """Fused decode→conf-gate→line-assembly in ONE mapInPandas stage.
@@ -239,8 +238,8 @@ def ocr_lines(media_pages: DataFrame, passthrough: tuple[str, ...] = (),
     sweeps languages at all (util/ocr_pdf.py:1170-1183). Build the set
     with ``functions.languages.lexicon_for("por+eng")``.
 
-    ``deskew`` (default on) runs I3 inside the decode stage: a scanned
-    page's physical skew surfaces as ROTATED word-box coordinates
+    Deskew (I3) runs inside the decode stage: a scanned page's physical
+    skew surfaces as ROTATED word-box coordinates
     (reference deskews the image before Tesseract, util/ocr_pdf.py:129-141;
     with the decoder downstream the observable equivalent is rotated
     boxes). Suspect pages — any assembled line whose words spread >
@@ -378,26 +377,23 @@ def ocr_lines(media_pages: DataFrame, passthrough: tuple[str, ...] = (),
                 lin = h2["line"][starts].astype(np.int32)
             lx = np.minimum.reduceat(h2["x"], starts).astype(np.int32)
             ly = np.minimum.reduceat(h2["y"], starts).astype(np.int32)
-            if deskew:
-                # suspect pages only (see SKEW_SPREAD_PX/SKEW_MIN_SLOPE);
-                # words and lines are page-contiguous after the stable sort
-                spread = (np.maximum.reduceat(h2["y"], starts)
-                          .astype(np.int64) - ly)
-                dx = (np.maximum.reduceat(h2["x"], starts).astype(np.int64)
-                      - lx)
-                sus = ((spread >= SKEW_SPREAD_PX)
-                       & (spread >= SKEW_MIN_SLOPE * dx))
-                if sus.any():
-                    wp_sorted = wp[order]
-                    for p in np.unique(line_page[sus]).tolist():
-                        w0 = np.searchsorted(wp_sorted, p, "left")
-                        w1 = np.searchsorted(wp_sorted, p, "right")
-                        l0 = np.searchsorted(line_page, p, "left")
-                        l1 = np.searchsorted(line_page, p, "right")
-                        got = _deskewed_anchors(h2[w0:w1],
-                                                starts[l0:l1] - w0)
-                        if got is not None:
-                            lx[l0:l1], ly[l0:l1] = got
+            # suspect pages only (see SKEW_SPREAD_PX/SKEW_MIN_SLOPE);
+            # words and lines are page-contiguous after the stable sort
+            spread = (np.maximum.reduceat(h2["y"], starts).astype(np.int64)
+                      - ly)
+            dx = np.maximum.reduceat(h2["x"], starts).astype(np.int64) - lx
+            sus = ((spread >= SKEW_SPREAD_PX)
+                   & (spread >= SKEW_MIN_SLOPE * dx))
+            if sus.any():
+                wp_sorted = wp[order]
+                for p in np.unique(line_page[sus]).tolist():
+                    w0 = np.searchsorted(wp_sorted, p, "left")
+                    w1 = np.searchsorted(wp_sorted, p, "right")
+                    l0 = np.searchsorted(line_page, p, "left")
+                    l1 = np.searchsorted(line_page, p, "right")
+                    got = _deskewed_anchors(h2[w0:w1], starts[l0:l1] - w0)
+                    if got is not None:
+                        lx[l0:l1], ly[l0:l1] = got
             ws = tstart[keepm][order].tolist()
             we = tend[keepm][order].tolist()
             wb = [joined[s:e] for s, e in zip(ws, we)]

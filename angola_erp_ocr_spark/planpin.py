@@ -8,13 +8,16 @@ plan change — a lost broadcast, a new exchange, a filter that stopped
 pushing down — fails a pytest (tests/test_plan_pins.py) at commit time
 instead of surfacing a round later.
 
-Digests here are INPUT-PATH-INDEPENDENT (scan locations stripped), unlike
-``bench._plan_digest`` (left byte-compatible with rounds 1-4 for
-round-over-round artifact continuity), so the same pin validates at sf0.01
-in tests and sf0.1 in the bench. They DO depend on session config that
-changes plan shape (shuffle partition counts appear in Exchange nodes), so
-pin and verify under the same session settings — both the tool and the
-test use local[8] / shuffle_partitions=8, the tests' standard session.
+Digests here are INPUT-PATH-INDEPENDENT (scan locations stripped), so the
+same pin validates at sf0.01 in tests and sf0.1 in the bench. They DO
+depend on session config that changes plan shape (shuffle partition
+counts appear in Exchange nodes), so pin and verify under the same session
+settings — both the tool and the test use local[8] /
+shuffle_partitions=8, the tests' standard session.
+
+``forced`` is the one aggregate the bench harness times a query through
+(``bench.py`` and the ``bench/run.py`` scaling legs, which ship only the
+package zip, both import it from here).
 
 Regenerate after an INTENTIONAL plan change:
 
@@ -26,8 +29,8 @@ from __future__ import annotations
 import hashlib
 import re
 
-# the pinned query set = bench.py's HEADLINE suite (the queries whose
-# plans the judge reads), importable without a SparkSession
+# the headline queries: pinned here, timed by bench.py; importable
+# without a SparkSession
 PINNED_QUERIES = [
     "flagship_extract",
     "l13_header_fields",
@@ -72,3 +75,15 @@ def normalized_plan(df) -> str:
 
 def plan_digest(df) -> str:
     return hashlib.md5(normalized_plan(df).encode()).hexdigest()[:12]
+
+
+def forced(df):
+    """The forcing aggregate every timed query runs through: the row count
+    and an order-free digest of every output column. A bare ``count()``
+    lets Catalyst prune each projection it does not need (the MinHash
+    signatures, the span assembly), so it times little more than the
+    scan."""
+    from pyspark.sql import functions as F
+
+    return df.agg(F.count(F.lit(1)).alias("rows"),
+                  F.bit_xor(F.xxhash64(*df.columns)).alias("digest"))

@@ -15,31 +15,38 @@ import time
 from typing import Iterator
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from ..schema import LINEAGE
+
+
+def _counted(batches: Iterator[pd.DataFrame], run_id: str,
+             rows: list[dict]) -> Iterator[pd.DataFrame]:
+    """Pass one partition's batches through; once they are exhausted,
+    append the partition's lineage row to ``rows``."""
+    t0 = time.monotonic()
+    docs = 0
+    spans = 0
+    for pdf in batches:
+        docs += len(pdf)
+        spans += int(pdf["spans"].map(len).sum()) if len(pdf) else 0
+        yield pdf
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx else -1
+    rows.append(dict(run_id=run_id, partition_id=pid, docs_in=docs,
+                     docs_out=docs, spans_emitted=spans, wall_ms=wall_ms))
 
 
 def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
     """Consume documents_extracted; emit one lineage row per partition."""
 
     def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        t0 = time.monotonic()
-        docs = 0
-        spans = 0
-        for pdf in batches:
-            docs += len(pdf)
-            spans += int(pdf["spans"].map(len).sum()) if len(pdf) else 0
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        yield pd.DataFrame(
-            [dict(run_id=run_id, partition_id=pid, docs_in=docs, docs_out=docs,
-                  spans_emitted=spans, wall_ms=wall_ms)],
-            columns=["run_id", "partition_id", "docs_in", "docs_out",
-                     "spans_emitted", "wall_ms"],
-        )
+        rows: list[dict] = []
+        for _ in _counted(batches, run_id, rows):
+            pass
+        yield pd.DataFrame(rows, columns=LINEAGE.fieldNames())
 
     return extracted.mapInPandas(per_partition, schema=LINEAGE)
 
@@ -89,20 +96,9 @@ def write_with_lineage(extracted: DataFrame, out_dir: str, run_id: str) -> dict:
     schema = extracted.schema
 
     def counted(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        t0 = time.monotonic()
-        docs = 0
-        spans = 0
-        for pdf in batches:
-            docs += len(pdf)
-            spans += int(pdf["spans"].map(len).sum()) if len(pdf) else 0
-            yield pdf
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        acc.add([dict(run_id=run_id, partition_id=pid, docs_in=docs,
-                      docs_out=docs, spans_emitted=spans, wall_ms=wall_ms)])
+        rows: list[dict] = []
+        yield from _counted(batches, run_id, rows)
+        acc.add(rows)
 
     wrapped = extracted.mapInPandas(counted, schema=schema)
     data_dir = f"{out_dir}/documents_extracted"

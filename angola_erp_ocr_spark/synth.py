@@ -45,7 +45,7 @@ HEAVY_FRACTION = 0.01
 # byte-identical; the class appears only in the ≥ 2M-doc scale runs
 # (tools/scale10m.py).
 # Env-overridable ONLY for the scale runner's smoke mode
-# (tools/scale10m.py embeds non-default values in its corpus dir name, so
+# (scale_corpus_dir embeds non-default values in the corpus dir name, so
 # a smoke corpus can never be mistaken for the canonical one); every test
 # and bench corpus uses the defaults.
 import os as _os
@@ -67,14 +67,39 @@ def patho_doc_ids(n_docs: int) -> list[str]:
             if i >= PATHO_START]
 
 
+# bump when this module changes the corpus content (g3: the skew class), so
+# a cached corpus of an older generation is never reused
+GENERATION = 3
+
+
 def scale_corpus_dir(n_docs: int) -> str:
-    """Canonical /tmp location of a materialized scale corpus; shared by
-    tools/scale10m.py (writer) and tools/resume10m.py (reader) so the
-    two can never disagree on which corpus a run used. The patho knobs
-    are embedded in the name: a smoke-mode corpus (env-overridden knobs)
-    can never be mistaken for the canonical one."""
+    """Canonical /tmp location of a materialized corpus; shared by every
+    writer (``materialize_corpus``) and tools/resume10m.py (reader) so
+    they can never disagree on which corpus a run used. The generation
+    and the patho knobs are embedded in the name: a stale or smoke-mode
+    corpus (env-overridden knobs) can never be mistaken for the
+    canonical one."""
     tag = f"{n_docs}_p{PATHO_PAGES}s{PATHO_START}e{PATHO_EVERY}"
-    return f"/tmp/spark_graft_scale_corpus_g3_{tag}"
+    return f"/tmp/spark_graft_scale_corpus_g{GENERATION}_{tag}"
+
+
+def materialize_corpus(spark, n_docs: int,
+                       partitions: int | None = None) -> str:
+    """Write ``build_corpus(spark, n_docs)`` once to parquet under
+    ``scale_corpus_dir(n_docs)`` (documents_raw, documents_expected,
+    media_pages, then a ``_DONE`` marker) and return the directory; a
+    directory that already has its marker is reused as is."""
+    out = scale_corpus_dir(n_docs)
+    marker = _os.path.join(out, "_DONE")
+    if not _os.path.exists(marker):
+        raw, golden, media = build_corpus(spark, n_docs,
+                                          partitions=partitions)
+        raw.write.mode("overwrite").parquet(f"{out}/documents_raw")
+        golden.write.mode("overwrite").parquet(f"{out}/documents_expected")
+        media.write.mode("overwrite").parquet(f"{out}/media_pages")
+        open(marker, "w").close()
+    return out
+
 # crooked-scan pages (rotated word boxes; the engine's in-pipeline deskew
 # must restore upright reading order). Angles on the I3 estimator's 0.25°
 # grid, both signs, within the ±6° search window.

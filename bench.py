@@ -14,8 +14,13 @@ throughput at both plus efficiency = T(4N)/(4*T(N)) — the sandbox
 stand-in for the N-vs-4N-executor criterion (BASELINE.md §3). Results are
 written to BENCH/BASELINE.md.
 
-The corpus is deterministic (seed=42) and materialized once to parquet, so
-every parallelism level reads identical input.
+Every timed query, the extraction included, runs through
+``planpin.forced`` (row count + XOR of ``xxhash64`` over every output
+column), so no projection is pruned out of the timing.
+
+The corpus is deterministic (seed=42) and materialized once to parquet
+(``synth.materialize_corpus``), so every parallelism level reads
+identical input.
 """
 
 from __future__ import annotations
@@ -28,22 +33,12 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from angola_erp_ocr_spark.planpin import (  # noqa: E402
+    PINNED_QUERIES, forced, normalized_plan, plan_digest)
+from angola_erp_ocr_spark.synth import materialize_corpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# headline operator queries (from the driver contract) timed at SF_DIR
-HEADLINE = [
-    "flagship_extract",
-    "l13_header_fields",
-    "dedup_exact",
-    "minhash_signatures",
-    "simhash_values",
-    "textstats",
-    "fingerprint",
-    "embedding_cosine_topk",
-    "join_sortmerge_qa",
-    "window_event_counts",
-]
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -69,11 +64,14 @@ EVENT_LOG_DIR = "/tmp/spark-graft-events"
 # Round 4 proved the small-level-throughput exclusion rule structurally
 # blind: host interference lands on the WIDE level (small-level throughput
 # stable ±14% while big-level spread 2.4×), so a rule keyed on any measured
-# pipeline throughput can never see it (tools/scaling_run2.py docstring).
-# The probe instruments the HOST independently of the pipeline: 8 processes
-# taskset-pinned to cores 0-7 (the cores both legs run on), each executing a
-# fixed numpy kernel (deterministic FLOP count). Probe metric = wall seconds
-# for all 8 to finish — independent of pairing, level and the gated ratio.
+# pipeline throughput can never see it (BENCH/scaling_run2.json; the run's
+# script is in git history). The probe instruments the HOST independently
+# of the pipeline: one process per probe core (``probe_cores``: the first
+# min(8, n) CPUs this process may run on — on the 32-core box the cores
+# 0-7 both legs run on), each taskset-pinned and executing a fixed numpy
+# kernel (deterministic FLOP count). Probe metric = wall seconds for all
+# of them to finish — independent of pairing, level and the gated ratio.
+# Walls compare only at the same core count, so every record carries it.
 #
 # PRE-REGISTERED exclusion rule (validated on r4 run 2, where it removed the
 # two HIGHEST efficiencies — it cannot inflate the result): a round is
@@ -89,24 +87,32 @@ _PROBE_KERNEL = (
 PROBE_EXCLUDE_SLOWER_PCT = 0.15
 
 
-def host_probe() -> float:
-    """Fixed-work 8-core host-capability probe; returns wall seconds.
+def probe_cores() -> list[int]:
+    """The CPUs ``host_probe`` pins its children to: the first min(8, n)
+    of the n CPUs this process may run on, never a CPU outside them."""
+    return sorted(os.sched_getaffinity(0))[:8]
 
-    A failed probe child (no taskset binary, fewer than 8 CPUs, missing
-    numpy) must RAISE, never return: each child exiting instantly would
-    yield a near-zero wall, poisoning the run-median the official
-    exclusion rule compares against — the instrument would be silently
-    disabled exactly where it cannot work (r5 review finding)."""
+
+def host_probe() -> float:
+    """Fixed-work host-capability probe, one child per ``probe_cores``
+    CPU; returns wall seconds.
+
+    A failed probe child (no taskset binary, missing numpy) must RAISE,
+    never return: each child exiting instantly would yield a near-zero
+    wall, poisoning the run-median the official exclusion rule compares
+    against — the instrument would be silently disabled exactly where it
+    cannot work."""
     import subprocess
+    cores = probe_cores()
     t0 = time.monotonic()
     procs = [
         subprocess.Popen(
             ["taskset", "-c", str(core), sys.executable, "-c", _PROBE_KERNEL],
             stdout=subprocess.DEVNULL, stderr=subprocess.PIPE)
-        for core in range(8)
+        for core in cores
     ]
     fails = []
-    for core, p in enumerate(procs):
+    for core, p in zip(cores, procs):
         _, err = p.communicate()
         if p.returncode != 0:
             fails.append(f"core {core}: rc={p.returncode} "
@@ -134,71 +140,18 @@ def _spark(master: str, parallelism: int):
     return spark
 
 
-CORPUS_GEN = 3  # bump when synth.py changes the corpus content (r4: skew)
-
-
-def materialize_corpus(spark, n_docs: int) -> str:
-    """Build the interleaved corpus once; reused across parallelism levels.
-    The directory is generation-versioned so a synth change can never
-    silently reuse a stale cached corpus from a previous round."""
-    from angola_erp_ocr_spark.synth import build_corpus
-
-    out = f"/tmp/spark_graft_bench_corpus_g{CORPUS_GEN}_{n_docs}"
-    marker = os.path.join(out, "_DONE")
-    if not os.path.exists(marker):
-        raw, golden, media = build_corpus(spark, n_docs)
-        raw.write.mode("overwrite").parquet(f"{out}/documents_raw")
-        golden.write.mode("overwrite").parquet(f"{out}/documents_expected")
-        media.write.mode("overwrite").parquet(f"{out}/media_pages")
-        open(marker, "w").close()
-    return out
-
-
-def _force(df) -> int:
-    """Fully execute the plan; returns row count (cheap final agg)."""
-    return df.count()
-
-
-def _plan_digest(df) -> tuple[str, str]:
-    """(normalized formatted plan, stable 12-hex digest). Expression ids
-    (#123), plan-node ids and codegen ids vary run-to-run and are
-    stripped, so the digest changes only when the plan SHAPE changes —
-    BENCH/plans.json diffs pinpoint plan regressions between rounds."""
-    import hashlib
-    import re
-
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-    norm = re.sub(r"#\d+[L]?", "#x", plan)
-    norm = re.sub(r"\[plan_id=\d+\]", "[plan_id=x]", norm)
-    norm = re.sub(r"\(\d+\)", "(n)", norm)
-    norm = re.sub(r"cvalue_\d+", "cvalue_x", norm)
-    return norm, hashlib.md5(norm.encode()).hexdigest()[:12]
-
-
-def run_extraction(spark, corpus_dir: str) -> tuple[float, int]:
-    """End-to-end interleaved extraction: read parquet → pipeline → force.
-
-    Forces via an aggregate over the spans column — a bare count() does
-    not execute the whole pipeline, because Catalyst prunes the segment
-    and total-order windows and the span assembly when only the row
-    count is needed."""
-    from pyspark.sql import functions as F
-
+def run_extraction(spark, corpus_dir: str) -> tuple[float, int, tuple]:
+    """End-to-end interleaved extraction: read parquet → pipeline →
+    ``forced``; returns (wall seconds, docs out, epoch-ms window)."""
     from angola_erp_ocr_spark.plans.pipeline import extract
 
     raw = spark.read.parquet(f"{corpus_dir}/documents_raw")
     media = spark.read.parquet(f"{corpus_dir}/media_pages")
     e0 = int(time.time() * 1000)
     t0 = time.monotonic()
-    row = (
-        extract(raw.select("doc_id", "spans"), media)
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.size("spans")).alias("total_spans"))
-        .collect()[0]
-    )
+    row = forced(extract(raw.select("doc_id", "spans"), media)).collect()[0]
     wall = time.monotonic() - t0
-    return wall, row["n"], (e0, int(time.time() * 1000))
+    return wall, row["rows"], (e0, int(time.time() * 1000))
 
 
 def span_pass_rate(spark, corpus_dir: str) -> float:
@@ -255,13 +208,14 @@ def main() -> None:
     qtimes: dict[str, float] = {}
     plans: dict[str, str] = {}
     digests: dict[str, str] = {}
-    for name in HEADLINE:
-        plans[name], digests[name] = _plan_digest(qs[name](spark, SF_DIR))
-        _force(qs[name](spark, SF_DIR))  # codegen/regex-compile warmup
+    for name in PINNED_QUERIES:
+        df = qs[name](spark, SF_DIR)
+        plans[name], digests[name] = normalized_plan(df), plan_digest(df)
+        forced(qs[name](spark, SF_DIR)).collect()  # codegen/regex warmup
         best = float("inf")
         for _ in range(3):
             t0 = time.monotonic()
-            _force(qs[name](spark, SF_DIR))
+            forced(qs[name](spark, SF_DIR)).collect()
             best = min(best, time.monotonic() - t0)
         qtimes[name] = round(best, 3)
     _write_plans(plans, digests)
@@ -272,11 +226,13 @@ def main() -> None:
         "metric": "end-to-end interleaved extraction + headline operator suite",
         "value": round(wall + sum(qtimes.values()), 3),
         "host_probe_walls_sec": [round(probe_start, 2), round(probe_end, 2)],
-        "host_probe_note": ("fixed-FLOP 8-core probe before/after the "
-                            "measured suite; compare against "
-                            "probe_median_wall_sec of the scaling run or "
-                            "prior rounds — a slow probe means a slow host "
-                            "window, not a code regression"),
+        "host_probe_cores": len(probe_cores()),
+        "host_probe_note": ("fixed-FLOP probe on host_probe_cores cores "
+                            "before/after the measured suite; compare "
+                            "against probe_median_wall_sec of the scaling "
+                            "run or prior rounds at the same core count — "
+                            "a slow probe means a slow host window, not a "
+                            "code regression"),
         "unit": "sec",
         "queries": qtimes,
         "sf": sf,
@@ -285,7 +241,9 @@ def main() -> None:
         "docs_per_sec": round(docs_per_sec, 1),
         "docs_out": out_docs,
         "cpus": CPUS,
-        "timing": "best-of-3 after warmup",
+        "timing": ("best-of-3 after warmup, each query and the extraction "
+                   "forced by planpin.forced (count + bit_xor(xxhash64("
+                   "every output column)))"),
         "extract_stages": [
             {k: s[k] for k in ("name", "tasks", "wall_ms", "exec_run_ms",
                                "shuffle_read_mb", "shuffle_write_mb")}
@@ -435,8 +393,9 @@ def run_scaling_protocol(corpus: str, n_docs: int,
     from angola_erp_ocr_spark.stagelog import stage_scaling_table
 
     # THE official exclusion rule since r5 (pre-registered; promoted from
-    # tools/scaling_run2.py after r4 proved the small-level-throughput
-    # rule blind to wide-level interference): a round is excluded iff any
+    # r4's run 2 — BENCH/scaling_run2.json, its script in git history —
+    # after r4 proved the small-level-throughput rule blind to wide-level
+    # interference): a round is excluded iff any
     # of its 3 host probes is >15% slower than the run-wide median probe
     # wall. The probe is independent of the pipeline and the gated ratio,
     # and "slower only" means the rule can only remove noise-hit rounds,
@@ -471,11 +430,12 @@ def run_scaling_protocol(corpus: str, n_docs: int,
         "efficiency_rounds": [round(e, 3) for e in per_round_eff],
         "excluded_rounds": excluded,
         "exclusion_rule": ("pre-registered (official since r5, validated "
-                           "on r4 run 2): drop rounds where any 8-core "
-                           "host probe is >15% slower than the run-wide "
+                           "on r4 run 2): drop rounds where any host probe "
+                           "is >15% slower than the run-wide "
                            "median probe wall (pipeline-independent; "
                            "slower-only, so it can never inflate)"),
         "probe_walls_sec": probe_walls,
+        "probe_cores": len(probe_cores()),
         "probe_median_wall_sec": round(med_probe, 2),
         "small_thr_rounds": [round(v, 1) for v in thr[n_small]],
         "big_thr_rounds": [round(v, 1) for v in thr[n_big]],

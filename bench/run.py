@@ -1,10 +1,12 @@
 """spark-submit job driver for the extraction pipeline (north-rule launch
 mode: ``spark-submit --py-files pkg.zip bench/run.py``).
 
-Builds (or reuses) the deterministic interleaved corpus, runs the full
-extraction with per-partition lineage, and supports resume: if the output
-already contains committed doc_ids, only missing documents are processed
-(anti-join; SURVEY §4.4).
+Builds (or reuses) the deterministic interleaved corpus
+(``synth.materialize_corpus``), runs the full extraction with
+per-partition lineage, and supports resume: if the output already
+contains committed doc_ids, only missing documents are processed
+(anti-join; SURVEY §4.4). ``--time-only`` times the extraction through
+``planpin.forced``, the aggregate bench.py times every query through.
 
 Usage:
     tools/make_pyfiles.sh                                # build pkg.zip
@@ -20,7 +22,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import time
 import uuid
 
@@ -40,23 +41,17 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     # spark-submit owns the session config; we only set analytics defaults
     spark = SparkSession.builder.appName("extract_job").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
+    from angola_erp_ocr_spark.planpin import forced
     from angola_erp_ocr_spark.plans.lineage import lineage_rows
     from angola_erp_ocr_spark.plans.pipeline import extract, resume_filter
-    from angola_erp_ocr_spark.synth import build_corpus
+    from angola_erp_ocr_spark.synth import materialize_corpus
 
-    corpus = args.corpus or f"/tmp/spark_graft_bench_corpus_{args.docs}"
-    if not os.path.exists(os.path.join(corpus, "_DONE")):
-        raw, golden, media = build_corpus(spark, args.docs)
-        raw.write.mode("overwrite").parquet(f"{corpus}/documents_raw")
-        golden.write.mode("overwrite").parquet(f"{corpus}/documents_expected")
-        media.write.mode("overwrite").parquet(f"{corpus}/media_pages")
-        open(os.path.join(corpus, "_DONE"), "w").close()
+    corpus = args.corpus or materialize_corpus(spark, args.docs)
 
     raw = spark.read.parquet(f"{corpus}/documents_raw").select("doc_id", "spans")
     media = spark.read.parquet(f"{corpus}/media_pages")
@@ -67,10 +62,7 @@ def main() -> None:
         for _ in range(max(args.runs, 1)):
             e0 = int(time.time() * 1000)
             t0 = time.monotonic()
-            # force through an aggregate over spans: a bare count() lets
-            # Catalyst prune the final sort/assembly
-            extract(raw, media).agg(
-                F.count(F.lit(1)), F.sum(F.size("spans"))).collect()
+            forced(extract(raw, media)).collect()
             windows.append((time.monotonic() - t0, e0,
                             int(time.time() * 1000)))
         best, e0, e1 = min(windows)

@@ -62,12 +62,11 @@ def test_rotated_page_extracts_identical_to_upright_twin(spark):
     word boxes rotated by a few degrees, including a right-column line
     whose rotated y anchor flips reading order — must extract a span
     sequence IDENTICAL to its upright twin. Also pins that the deskew is
-    doing the work: with deskew off, the rotated doc's order differs."""
+    doing the work: ordering the rotated twin's raw word boxes by each
+    line's min-y anchor gives a different line order than upright."""
     import math
 
     from angola_erp_ocr_spark.glyph import encode_page
-    from angola_erp_ocr_spark.operators.ocr import ocr_lines
-    from angola_erp_ocr_spark.plans import pipeline
     from angola_erp_ocr_spark.schema import DOCUMENTS_RAW, MEDIA_PAGE
 
     lines = [
@@ -113,12 +112,16 @@ def test_rotated_page_extracts_identical_to_upright_twin(spark):
         assert ([(k, t) for k, t, _ in got[d]]
                 == [(k, t) for k, t, _ in got["up"]]), d
 
-    # teeth: without deskew the rotated twin's order is corrupted
-    real = ocr_lines
-    pipeline.ocr_lines = lambda *a, **k: real(*a, **{**k, "deskew": False})
-    try:
-        got_off = {r["doc_id"]: [(s["kind"], s["text"]) for s in r["spans"]]
-                   for r in extract(raw, media).collect()}
-    finally:
-        pipeline.ocr_lines = real
-    assert got_off["rotneg"] != [(k, t) for k, t, _ in got["up"]]
+    # teeth: the raw rotated boxes put the lines in another order, so the
+    # equality above is the deskew's work. Each line's anchor is its words'
+    # (min y, min x), as in the decoder before deskew
+    def line_order(rotate_deg):
+        anchors = {}
+        for w in words(rotate_deg):
+            y, x = anchors.get(w["line"], (w["y"], w["x"]))
+            anchors[w["line"]] = (min(y, w["y"]), min(x, w["x"]))
+        return sorted(anchors, key=anchors.get)
+
+    assert line_order(0.0) == [0, 1, 2, 3, 4]
+    for deg in (-3.5, 2.0):
+        assert line_order(deg) != line_order(0.0), deg
